@@ -452,15 +452,7 @@ object DedupIndex {
     val staging = stagingPath.toString
     if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
     val committed = committedIngests(s, root)
-    val inSet = committed.map(java.lang.Long.valueOf)
-    writePrepared(
-      s.read.parquet(bandsDir(root))
-        .filter(col("ingest").cast("long").isin(inSet: _*))
-        .select("doc_id", "band_idx", "band_hash"),
-      s.read.parquet(profilesDir(root))
-        .filter(col("ingest").cast("long").isin(inSet: _*))
-        .select("doc_id", "ss", "n_sh"),
-      staging, 0L)
+    writePrepared(storedBands(s, root), storedProfiles(s, root), staging, 0L)
     val hwm = math.max(committed.max, compactedThrough(s, root))
     val out = fs.create(hwmPath(staging), true)
     try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()

@@ -1,18 +1,55 @@
 package graft.sources
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated parquet fixtures (TESTDATA.md).
   *
   * Every declared query reads ONLY through these — one place to change if
   * the physical layout evolves (partitioned dirs, bucketed tables, a real
   * catalog). At cluster scale these would be catalog tables with
-  * statistics; here they are bare parquet scans, which Spark's vectorized
+  * statistics; here they are parquet scans, which Spark's vectorized
   * reader + Catalyst pushdown already handle well.
+  *
+  * Each table's schema is resolved once and then supplied to the reader:
+  * footer inference is a Spark job of its own, and at small scale it was
+  * about a quarter of a cheap key's jobs. The memo's key is the qualified
+  * path, the (path, length, mtime) of every leaf file, and the session's
+  * explicitly set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * confs — so a fixture rewritten in place is re-inferred, and a vanilla
+  * and a `nanosAsLong` session never share an entry. A failed inference
+  * is not cached.
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[(String, Long, Long)], Seq[(String, String)]), StructType]
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = new Path(s"$sfDir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(path)
+    val files = mutable.ArrayBuffer.empty[(String, Long, Long)]
+    // a missing path keys on no files; the inference below raises its error
+    try {
+      val it = fs.listFiles(qualified, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => }
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted
+    val key = (qualified.toString, files.toSeq.sorted, confs)
+    val schema = Option(schemas.get(key)).getOrElse {
+      val inferred = spark.read.parquet(path.toString).schema
+      Option(schemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+    }
+    spark.read.schema(schema).parquet(path.toString)
+  }
 
   def region(s: SparkSession, d: String)     = load(s, d, "region")
   def nation(s: SparkSession, d: String)     = load(s, d, "nation")

@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 import graft.sources.Tables
 
 /** Fixture-schema-drift guard (round-10 verdict item #2).
@@ -13,7 +16,9 @@ import graft.sources.Tables
   * regeneration: every `Tables.*` loader must resolve on a session WITHOUT
   * the legacy nanos conf, at every tier, and `events.ts` must come out a
   * plain µs TIMESTAMP carrying the same instant whatever the footer
-  * encodes (ns-as-long, µs NTZ, or µs UTC-adjusted).
+  * encodes (ns-as-long, µs NTZ, or µs UTC-adjusted). `Tables.load`'s
+  * schema memo must never serve a schema that the current footer, or the
+  * calling session's parquet confs, no longer resolve to.
   */
 class FixtureDriftSpec extends SparkSpec {
 
@@ -90,6 +95,102 @@ class FixtureDriftSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(vals == expected, s"$enc: µs instants differ from ground truth")
     }
+  }
+
+  /** Schema, row count and an order-free content hash of a frame. */
+  private def fingerprint(df: DataFrame): (StructType, Long, Long) = {
+    val r = df.agg(count(lit(1)), sum(hash(df.columns.map(col): _*).cast("long"))).head
+    (df.schema, r.getLong(0), r.getLong(1))
+  }
+
+  /** Tables.load, twice (the second a memo hit), must match a bare read. */
+  private def assertMatchesBareRead(s: SparkSession, dir: String, name: String,
+                                    what: String): Unit = {
+    val bare = fingerprint(s.read.parquet(s"$dir/$name.parquet"))
+    for (i <- 1 to 2)
+      assert(fingerprint(Tables.load(s, dir, name)) == bare, s"$what, load $i: differs from a bare read")
+  }
+
+  test("a fixture rewritten in place is re-inferred, never served a stale schema") {
+    val base = Files.createTempDirectory("graft-memo").toString
+    val v1 = spark.range(50).select(col("id").cast("int").as("k"),
+      (col("id") * 3).cast("int").as("v"))
+    val versions = Seq(
+      "original" -> v1,
+      "changed type" -> v1.select(col("k"), col("v").cast("long").as("v")),
+      "added column" -> v1.select(col("k"), col("v").cast("long").as("v"),
+        (col("k") * 0.5).as("w")))
+    // a single-file fixture, as the driver generates them
+    def writeFile(df: DataFrame): Unit = {
+      val tmp = s"$base/tmp"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+      Files.copy(part.toPath, Paths.get(s"$base/file.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    // a Spark-written directory
+    def writeDir(df: DataFrame): Unit =
+      df.write.mode("overwrite").parquet(s"$base/dir.parquet")
+    for ((name, write) <- Seq("file" -> (writeFile _), "dir" -> (writeDir _));
+         (what, df) <- versions) {
+      write(df)
+      def fields(t: StructType) = t.fields.toSeq.map(f => f.name -> f.dataType)
+      assert(fields(Tables.load(spark, base, name).schema) == fields(df.schema),
+        s"$name/$what: stale schema")
+      assertMatchesBareRead(spark, base, name, s"$name/$what")
+    }
+  }
+
+  /** A single-file fixture of (event_id, ts) rows with `tsType` as the
+    * footer's ts annotation, written as a non-Spark generator would: no
+    * Spark schema in the footer metadata (Spark cannot write NANOS). */
+  private def writeEvents(path: String, tsType: String, ts: Long => Long): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      s"message m { required int64 event_id; required int64 ts ($tsType); }")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(path), conf)
+    val w = ExampleParquetWriter.builder(out).withConf(conf).withType(schema).build()
+    val rows = new SimpleGroupFactory(schema)
+    try for (i <- 0 until 100)
+      w.write(rows.newGroup().append("event_id", i.toLong).append("ts", ts(i)))
+    finally w.close()
+  }
+
+  test("the schema memo resolves per session: one path, two parquet confs") {
+    val base = Files.createTempDirectory("graft-memo-conf").toString
+    writeEvents(s"$base/events.parquet", "TIMESTAMP(MICROS,false)",
+      i => 1700000000000000L + i * 999937L)
+    val ntz = spark.newSession()
+    ntz.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    val ltz = spark.newSession()
+    ltz.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for (_ <- 1 to 2) {
+      assert(Tables.load(ntz, base, "events").schema("ts").dataType == TimestampNTZType)
+      assert(Tables.load(ltz, base, "events").schema("ts").dataType == TimestampType)
+    }
+    assertMatchesBareRead(ntz, base, "events", "inferTimestampNTZ on")
+    assertMatchesBareRead(ltz, base, "events", "inferTimestampNTZ off")
+  }
+
+  test("a NANOS footer resolves per session; the failed vanilla inference is not cached") {
+    val base = Files.createTempDirectory("graft-memo-ns").toString
+    writeEvents(s"$base/events.parquet", "TIMESTAMP(NANOS,true)",
+      i => 1700000000000000000L + i * 999937L)
+    val nanos = spark.newSession()
+    nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val vanilla = spark.newSession()
+    vanilla.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    intercept[Exception](vanilla.read.parquet(s"$base/events.parquet").schema)
+    intercept[Exception](Tables.load(vanilla, base, "events"))
+    assert(Tables.load(nanos, base, "events").schema("ts").dataType == LongType)
+    assertMatchesBareRead(nanos, base, "events", "nanosAsLong")
+    // not served the nanosAsLong session's entry, and still failing
+    intercept[Exception](Tables.load(vanilla, base, "events"))
   }
 
   test("events.ts loads as long under the legacy conf only when footer is ns") {

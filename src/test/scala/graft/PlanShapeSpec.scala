@@ -384,6 +384,39 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("Join"), "symmetrization join missing")
   }
 
+  test("building a DuckDB-proxy key launches no Spark job once its tables are resolved") {
+    // the twelve DuckDB-proxy keys of BASELINE.md; their only build-time
+    // jobs were parquet footer inference, which Tables.load now memoizes
+    val keys = Seq("q_agg_hash", "q_join_multiway", "q_win_topk_group",
+      "q_topk", "q_join_interval", "q_join_asof", "q_tumbling", "q_json_funcs",
+      "q_knn_cosine", "q_events_session", "q_intersect", "q_dedup")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    keys.foreach(k => SparkEntry.queries(k)(spark, sf0001))  // the warm call
+    sc.addSparkListener(listener)
+    try {
+      for (k <- keys) {
+        sc.setJobGroup(s"build-$k", k)
+        try SparkEntry.queries(k)(spark, sf0001) finally sc.clearJobGroup()
+      }
+      // listener events arrive in order: once a sentinel job is seen,
+      // every job the builds started has been counted
+      sc.setJobGroup("build-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30e9.toLong
+      while (!jobs.containsKey("build-sentinel") && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(jobs.containsKey("build-sentinel"), "listener never saw the sentinel job")
+    } finally sc.removeSparkListener(listener)
+    val built = keys.flatMap(k => Option(jobs.get(s"build-$k")).map(k -> _))
+    assert(built.isEmpty, s"keys launched Spark jobs at build time: ${built.mkString(", ")}")
+  }
+
   test("whole-stage codegen covers the hot path of the flagship") {
     // AQE finalizes the plan only on execution; codegen'd operators carry
     // the "*(n)" prefix in the executed plan string.
