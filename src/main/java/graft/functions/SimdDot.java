@@ -12,7 +12,7 @@ import jdk.incubator.vector.VectorSpecies;
  *
  * The scalar prefilter is load-throughput-bound: 2·d scalar loads per
  * pair at 2 loads/cycle puts a hard ~d-cycle floor under any scalar
- * kernel (measured 22.6 ns/pair at d=64 — ProbeDotKernel), which SIMD
+ * kernel (measured 22.6 ns/pair at d=64 — PLANS_r18), which SIMD
  * loads break by moving 8 lanes per instruction (AVX-512 on this class
  * of box; SPECIES_PREFERRED degrades gracefully to 4- or 2-lane).
  *

@@ -61,11 +61,8 @@ object BenchStream {
     // right-sized state layout for this corpus; a real deployment sizes
     // this to keyspace × executor count, not to local core count.
     val statePartitions = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = Session.builder(cpus.toInt)
       .config("spark.sql.shuffle.partitions", statePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // output_rows is summed from recentProgress, which retains only
       // this many entries — keep retention far above any batch count
       // this bench produces (and assert below) so the sum never

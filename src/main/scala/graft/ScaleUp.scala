@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -34,18 +34,12 @@ object ScaleUp {
     val Array(src, dst) = args.take(2)
     val replicas = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // if the source events fixture is ns-encoded, the raw read needs the
-    // ns→long shim and the scaled copy holds a plain BIGINT ns column; a
+    // the session's nanosAsLong lets an ns-encoded source events fixture
+    // load, and the scaled copy then holds a plain BIGINT ns column; a
     // µs fixture passes through as TIMESTAMP/NTZ — Tables.events sniffs
     // the resolved type and normalizes either encoding (FixtureDriftSpec)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = Session.builder(cpus.toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     for ((table, keys) <- keyCols) {
       val base = Tables.load(spark, src, table)
       val scaled: DataFrame = (0 until replicas).map { i =>

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Zipf-shaped documents fixture generator (verdict r17 #1): the driver
   * fixture's ~60-token vocabulary makes every postings bucket dense and
   * every text key measure an adversarial density no real corpus has —
-  * ProbeZipf quantified the probe-side curve; this writes a WHOLE
+  * PLANS_r17 quantified the probe-side curve; this writes a WHOLE
   * documents.parquet tier with a Zipf(s≈1) vocabulary so the full text
   * family (tfidf/bm25/collocations/ngram-lm/perplexity + the stored
   * text index) re-measures under realistic head-term skew at
@@ -37,11 +36,7 @@ object ZipfDocs {
     val vocab = if (args.length > 2) args(2).toInt else 60000
     val withDups = args.length > 3 && args(3) == "dups"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val lnV = math.log(vocab.toDouble)

@@ -365,7 +365,7 @@ object DedupIndex {
     * within, band join + distinct + gates for cross) and re-aggregated
     * the batch shingle sets for the within verify; at micro-batch
     * grain those duplicated exchanges are wall, not work
-    * (ProbeDedupIngest). */
+    * (PLANS_r18). */
   private[graft] def ingestQueryFused(s: SparkSession, root: String,
                                       bd: DataFrame, pf: DataFrame,
                                       excludeIds: DataFrame,

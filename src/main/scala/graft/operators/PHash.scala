@@ -263,7 +263,7 @@ object PHash {
     // with ReuseExchange deduplicating the repeated subtrees. Each
     // localCheckpoint is a separate Spark action; at micro-batch grain
     // the ~36-tiny-jobs-per-batch floor WAS the measured throughput
-    // (ProbeFrameIngest), so the batch face trades recompute-safety
+    // (PLANS_r18), so the batch face trades recompute-safety
     // (worthless on 1000-doc inputs) for job count.
     val g0 = docs.groupBy(col("text"))
       .agg(min(col("doc_id")).as("rep"),
@@ -601,7 +601,7 @@ object PHash {
     * and emits BOTH containment directions from each candidate pair in
     * ONE pass — the two-direction struct explodes per inter row, so
     * the stored-corpus join runs once without a checkpoint to protect
-    * it. ProbeFrameIngest measured the unfused screen at 14 actions
+    * it. PLANS_r18 measured the unfused screen at 14 actions
     * per 1000-doc batch; this form contributes zero of its own (it all
     * runs inside the caller's output-write job). */
   def screenAdmitFused(bsigAll: DataFrame, stored: DataFrame,
@@ -658,7 +658,7 @@ object PHash {
     * size aggregation carrying both denominators, one membership
     * expansion frame shared by all branches. At a trigger-bounded
     * micro-batch the wall is AQE stage-job count, not rows
-    * (ProbeFrameIngest), so exchange count IS the throughput. */
+    * (PLANS_r18), so exchange count IS the throughput. */
   def ingestScreenFused(batch: DataFrame, sig: DataFrame,
                         stored: DataFrame, hotHashes: DataFrame,
                         num: Int = 4, den: Int = 5,

@@ -147,7 +147,7 @@ object SimHash {
     // join emits DOC order, scattering every key's chain across the
     // corpus-sized row pool, and walking those chains 2×10⁹ times
     // measured 34.3 vs 3.6 s at the 100× tier on identical rows
-    // (ProbeSim2: pure cache locality). One narrow (doc_id, simhash)
+    // (PLANS_r17: pure cache locality). One narrow (doc_id, simhash)
     // shuffle — 8 MB at that tier — buys cache-local chains.
     val nP = docs.sparkSession.sessionState.conf.numShufflePartitions
     val sig = grainedSignatures(docs, idCol, textCol)
@@ -173,7 +173,7 @@ object SimHash {
     // pair frame, so the union happens on a few thousand 24-byte rows —
     // never on the quadratic doc-pair streams. Two measured reasons,
     // both found at the 100× replica tier (984M inter + 385M intra
-    // expansion rows; ProbeSim decomposition, PLANS_r16):
+    // expansion rows; decomposition in PLANS_r16):
     //  1. A doc-grain union is a whole-stage-codegen BOUNDARY: every
     //     expanded row materializes between the join stages and the
     //     aggregation above, and the two legs' combined throughput

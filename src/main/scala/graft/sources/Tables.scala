@@ -3,6 +3,7 @@ package graft.sources
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -72,20 +73,23 @@ object Tables {
     *     fixture generator's contract). A bare cast to TIMESTAMP would
     *     interpret it in the SESSION timezone — correct only on the
     *     engine's own UTC-pinned sessions and silently hours off on an
-    *     external caller's local-TZ session (the same defensive-caller
-    *     contract the nanosAsLong set below exists for). The
+    *     external caller's local-TZ session. The
     *     `from_utc_timestamp(cast, current_timezone())` composition
     *     cancels the session offset exactly: cast subtracts it,
     *     from_utc_timestamp adds it back — TZ-independent, and a no-op
     *     chain under UTC (bit-identical to the previous behavior there).
-    *   - TimestampType: already what we want. */
+    *   - TimestampType: already what we want.
+    * A caller's session is left as it is unless the footer is NANOS and
+    * the session lacks `nanosAsLong` (Spark's PARQUET_TYPE_ILLEGAL): only
+    * then is the conf set on it, and the load retried once. */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, current_timezone, expr, from_utc_timestamp, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    // Defensive: lets a vanilla external session read a ns-encoded fixture.
-    // Harmless for µs fixtures (the conf only affects NANOS columns).
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val raw = try load(s, d, "events") catch {
+      case e: Exception if nanosRejected(e) =>
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        load(s, d, "events")
+    }
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts",
@@ -95,6 +99,14 @@ object Tables {
         s"events.ts: unsupported physical type $other (expected ns-long, TIMESTAMP, or TIMESTAMP_NTZ)")
     }
   }
+  /** Spark's refusal of a TIMESTAMP(NANOS) column, anywhere in the cause
+    * chain (footer inference runs as a job, so it arrives wrapped). */
+  private def nanosRejected(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: SparkThrowable =>
+        t.getCondition == "PARQUET_TYPE_ILLEGAL" && t.getMessage.contains("NANOS")
+      case _ => false
+    }
   def documents(s: SparkSession, d: String)  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String) = load(s, d, "embeddings")
 }

@@ -797,7 +797,7 @@ object Streams {
     * emitted exactly once, by whichever batch completes it (pinned in
     * StreamingSpec).
     *
-    * Per-batch cost discipline (the measured one — ProbeFrameIngest):
+    * Per-batch cost discipline (the measured one — PLANS_r18):
     * a micro-batch's wall is TINY-JOB COUNT, not rows; the unfused
     * form paid ~36 actions/batch (three separate signature passes +
     * checkpoint actions guarding recomputes that cost nothing at

@@ -1,8 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-
-import org.apache.spark.sql.SparkSession
+import graft.{Session, SparkEntry}
 
 /** Dev tool: write `.explain("formatted")` for declared keys to files —
   * the plans/r18 before/after evidence the optimization rounds commit.
@@ -16,14 +14,7 @@ object ExplainDump {
     val Array(d, outDir, suffix, keyCsv) = args.take(4)
     val keys = keyCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "500000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (k <- keys; fn <- SparkEntry.queries.get(k)) {

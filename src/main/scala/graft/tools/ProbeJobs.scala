@@ -1,10 +1,8 @@
 package graft.tools
 
-import graft.SparkEntry
-
+import graft.{Session, SparkEntry}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Dev probe: Spark JOB count per declared key — the fixed-cost floor
@@ -12,18 +10,13 @@ import java.util.concurrent.atomic.AtomicInteger
   * q_join_bcast, q_join_range, q_intersect_all tripped the single-run
   * 2× threshold on per-query job count, not plan cost). A key whose
   * count() is one job has no extra actions to fold.
-  * Usage: runMain graft.ProbeJobs <sfDir> <key>[,<key>…]
+  * Usage: runMain graft.tools.ProbeJobs <sfDir> <key>[,<key>…]
   */
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
     val d = args(0)
     val keys = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -11,11 +11,12 @@ import org.apache.spark.sql.SparkSession
   * to 128 DISTINCT KEYS PER PARTITION: above it, execution silently
   * degrades to sort-based aggregation — every input row re-sorted, the
   * partial-reduce-before-exchange win gone. Results stay correct; the
-  * scale property doesn't. All five repo entry points set it to 500000,
-  * but a FOREIGN session (a user's own SparkSession.builder) would
-  * degrade silently, so the two affected queries raise the floor
-  * defensively at plan-build time. Raising a runtime conf is session-
-  * scoped and monotone here (never lowers a user's higher setting). */
+  * scale property doesn't. Every repo session is built by
+  * [[graft.Session]], which sets it to 500000, but a FOREIGN session (a
+  * caller's own builder) would degrade silently, so the two affected
+  * queries raise the floor defensively at plan-build time. Raising a
+  * runtime conf is session-scoped and monotone here (never lowers a
+  * user's higher setting). */
 object Confs {
   val ObjHashKey =
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"

@@ -27,15 +27,15 @@ class FixtureDriftSpec extends SparkSpec {
   private val tables = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
   test("every table loads on a vanilla session (no legacy confs) at all tiers") {
     // newSession shares the context but gets its own SQLConf; drop the
-    // legacy conf BEFORE EVERY LOAD — Tables.events defensively re-sets
-    // it, so a single up-front unset would leave every subsequent load
-    // running with the conf and never exercise the no-conf path.
+    // legacy conf once — no load may set it back on the caller's session
     val vanilla = spark.newSession()
     vanilla.conf.set("spark.sql.session.timeZone", "UTC")
+    vanilla.conf.unset(nanosAsLong)
     for (tier <- tiers; name <- tables) {
-      vanilla.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
       val df = name match {
         case "events" => Tables.events(vanilla, tier)
         case other    => Tables.load(vanilla, tier, other)
@@ -46,6 +46,8 @@ class FixtureDriftSpec extends SparkSpec {
         assert(df.schema("ts").dataType == TimestampType,
           s"$tier/events.ts resolved to ${df.schema("ts").dataType}, want µs TIMESTAMP")
     }
+    assert(!vanilla.conf.getOption(nanosAsLong).contains("true"),
+      "a µs fixture load set nanosAsLong on the caller's session")
   }
 
   test("events.ts instants are session-timezone-INDEPENDENT (external non-UTC caller)") {
@@ -182,15 +184,29 @@ class FixtureDriftSpec extends SparkSpec {
     writeEvents(s"$base/events.parquet", "TIMESTAMP(NANOS,true)",
       i => 1700000000000000000L + i * 999937L)
     val nanos = spark.newSession()
-    nanos.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    nanos.conf.set(nanosAsLong, "true")
     val vanilla = spark.newSession()
-    vanilla.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    vanilla.conf.unset(nanosAsLong)
     intercept[Exception](vanilla.read.parquet(s"$base/events.parquet").schema)
     intercept[Exception](Tables.load(vanilla, base, "events"))
     assert(Tables.load(nanos, base, "events").schema("ts").dataType == LongType)
     assertMatchesBareRead(nanos, base, "events", "nanosAsLong")
     // not served the nanosAsLong session's entry, and still failing
     intercept[Exception](Tables.load(vanilla, base, "events"))
+  }
+
+  test("Tables.events on a vanilla session still reads a NANOS footer, as µs instants") {
+    val base = Files.createTempDirectory("graft-events-ns").toString
+    val ns = (i: Long) => 1700000000000000000L + i * 999937L
+    writeEvents(s"$base/events.parquet", "TIMESTAMP(NANOS,true)", ns)
+    val vanilla = spark.newSession()
+    vanilla.conf.unset(nanosAsLong)
+    val got = Tables.events(vanilla, base)
+    assert(got.schema("ts").dataType == TimestampType)
+    val vals = got.select(col("event_id"), unix_micros(col("ts")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(vals == (0L until 100L).map(i => i -> ns(i) / 1000).toMap,
+      "µs instants differ from the written ns values")
   }
 
   test("events.ts loads as long under the legacy conf only when footer is ns") {

@@ -113,6 +113,14 @@ class PreflightSpec extends SparkSpec {
     }
   }
 
+  test("repo sessions carry the conf contract Confs assumes (graft.Session)") {
+    val c = spark.conf
+    assert(c.get(graft.util.Confs.ObjHashKey).toInt >= 500000)
+    assert(c.get("spark.sql.session.timeZone") == "UTC")
+    assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(c.get("spark.sql.extensions").split(",").contains("graft.GraftExtensions"))
+  }
+
   test("q_knn_join / q_text_heavyhitters self-configure on a foreign session") {
     // a user's own SparkSession won't carry the repo entry points'
     // objectHashAggregate headroom; the two affected queries must raise

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sources.Tables
 
 /** Diagnostic (not a test): try EVERY declared oracle through
@@ -9,13 +8,7 @@ import graft.sources.Tables
   * SqlEntrySpec.ansiCommon. Run: sbt "Test/runMain graft.SqlEntryScan" */
 object SqlEntryScan {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "500000")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
