@@ -546,8 +546,8 @@ object Graft {
   }
 
   /** Build/refresh the MinHash dedup index at rest (operators.DedupIndex)
-    * from `docs(idCol, textCol)`: banded signature buckets + exact shingle
-    * profiles, both parquet. An incoming batch then dedups against the
+    * from `docs(idCol, textCol)`: one parquet row per doc with its band
+    * hashes and exact shingle profile. An incoming batch then dedups against the
     * stored corpus via [[dedupIndexQuery]] with zero corpus shuffle. */
   def dedupIndexBuild(docs: DataFrame, idCol: String, textCol: String,
                       root: String, shingleN: Int = 3): Unit =

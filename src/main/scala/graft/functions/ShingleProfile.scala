@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Replaces, for the dedup index's build/query paths, the shingle
   * EXPLODE (one row per (doc_id, shingle)) feeding TWO corpus-scale
   * doc_id exchanges — `MinHashLSH.signatures`' 16-min aggregate and
-  * `DedupIndex.profiles`' sort_array(collect_list) — plus the exploded
+  * the profile aggregate's sort_array(collect_list) — plus the exploded
   * frame's localCheckpoint: row volume stays at doc grain and the
   * signature pass costs ZERO exchanges (guide §1.2 step 1, §2.3/2.4).
   * Returns NULL for a document with fewer than `nGram` tokens — exactly

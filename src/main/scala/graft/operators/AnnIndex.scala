@@ -294,7 +294,7 @@ object AnnIndex {
     * scan lists and opens the probed cells' accumulated files, and
     * Spark pays a per-FILE open cost, so probe latency degrades with
     * file COUNT at flat row volume — the small-file trap measured on
-    * the dedup index's stream bench (DedupIndex.writePrepared
+    * the dedup index's stream bench (DedupIndex.writeIngest
     * Scaladoc). Code ROWS are preserved exactly and the ADC sum is an
     * order-independent decimal aggregate, so every query answers
     * bit-identically before and after (pinned in AnnIndexSpec) — only

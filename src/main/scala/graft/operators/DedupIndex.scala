@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.util.AtomicSwap
 
 /** MinHash/LSH dedup index AT REST — the artifact-centric half of the
   * near-dup stack, mirroring [[AnnIndex]] for retrieval.
@@ -11,61 +14,73 @@ import org.apache.spark.sql.functions._
   * dedup pipeline works that way: the corpus is signatured ONCE, the
   * artifact lives on shared storage, and each incoming batch (a crawl
   * snapshot, a day of documents) is deduped AGAINST the stored index —
-  * then appended to it. Artifacts:
+  * then appended to it. One table, one row per document:
   *
-  *   root/bands/    — (band_idx, band_hash, doc_id)   corpus band buckets
-  *   root/profiles/ — (doc_id, ss, n_sh)              sorted shingle sets
+  *   root/docs/ingest=N/ — (doc_id, bands, ss, n_sh): `bands(i)` is band
+  *                         i's hash (MinHashLSH.bandHashes), `ss` the
+  *                         sorted shingle-hash set, `n_sh` its size
+  *   root/compacted_through — the compaction high-water mark
   *
-  * Scale shape of the query path (the whole point of the artifact):
-  *  - the BATCH side is signatured in flight (batch ≪ corpus) and, for
-  *    INCREMENT-SIZED batches, its band rows are BROADCAST, so candidate
-  *    generation is one streaming scan of the stored band table through a
-  *    BroadcastHashJoin — the corpus is never shuffled, and the band
-  *    files are written sorted on (band_idx, band_hash) so parquet
-  *    min/max row-group stats prune buckets that no batch band touches;
-  *  - exact-Jaccard verification joins the (batch-bounded) candidate set
-  *    against the stored PROFILES table the same way — candidates
-  *    broadcast, profile scan streams, zero corpus shuffle. Precision is
-  *    exact (array_intersect on the stored sorted sets); the only
-  *    approximation is banding recall at the threshold, identical to
-  *    q_dedup_minhash (b=8, r=2: P(candidate | J=0.8) ≈ 0.9997);
-  *  - the broadcasts are ADAPTIVE, each gated on the size of the frame
-  *    it actually ships: the bands join on batch DOC count (payload =
-  *    band rows), the profiles join on candidate PAIR count (payload =
-  *    pairs × full shingle sets — a small batch against a
-  *    high-duplication corpus fans out to millions of pairs, so doc
-  *    count alone would still OOM the driver). Above the thresholds
-  *    queryBatch falls back to plain shuffle joins — the correct plan
-  *    once the "batch" is itself corpus-scale (found the hard way: a
-  *    100k-doc batch at the 100× probe tier OOMed the forced
-  *    broadcast). The size facts cost two bounded jobs at call time
-  *    (the AQE trade); the batch shingles are checkpointed once so
-  *    nothing is shingled twice.
+  * Query shape — one pass over the stored docs: each row's `bands` is
+  * posexploded and probes the batch's exploded (band_idx, band_hash)
+  * rows; two docs meet once per band they share, and only the meeting
+  * at their FIRST shared band index is kept, so every pair arrives
+  * exactly once with no distinct and no shuffle. The surviving pairs
+  * carry both shingle sets, so exact Jaccard (array_intersect on the
+  * sorted sets) filters them in the same pass. Precision is exact; the
+  * only approximation is banding recall at the threshold, identical to
+  * q_dedup_minhash (b=8, r=2: P(candidate | J=0.8) ≈ 0.9997).
+  *
+  * Broadcast or shuffle is Catalyst's size decision, with no hint and
+  * no count (`spark.sql.autoBroadcastJoinThreshold` and its AQE twin):
+  * an increment-sized batch is broadcast and the stored scan streams
+  * with no exchange above it; a corpus-scale batch (the
+  * q_dedup_index_backfill shape — a forced broadcast of a 100k-doc
+  * batch once OOMed the 100× probe) exceeds the threshold and the join
+  * shuffles on the band key. The streaming ingest persists its batch
+  * rows and writes them before it screens them, so that decision is
+  * taken on the cached batch's measured size, not on a source estimate.
   *
   * The batch-vs-corpus contract means a pipeline alternates
   * queryBatch → append: accepted batches join the index incrementally,
-  * so the corpus is signatured exactly once across its lifetime. Both
-  * artifacts are hive-partitioned by INGEST id (`bands/ingest=N/`):
-  * each append overwrites only its own ingest partition, which makes
-  * re-delivery of a batch (a streaming replay after failure) exactly
-  * idempotent — the property [[graft.streaming.Streams.dedupIndexIngest]]
-  * builds on — and gives per-batch lineage/retention at rest for free.
+  * so the corpus is signatured exactly once across its lifetime. Each
+  * append is one write into its own ingest partition (`_SUCCESS` is its
+  * commit marker), which makes re-delivery of a batch (a streaming
+  * replay after failure) exactly idempotent — the property
+  * [[graft.streaming.Streams.dedupIndexIngest]] builds on — and gives
+  * per-batch lineage/retention at rest for free.
   */
 object DedupIndex {
 
-  private def bandsDir(root: String)    = s"$root/bands"
-  private def profilesDir(root: String) = s"$root/profiles"
-  private def hwmPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/compacted_through")
+  private val RowSchema =
+    "doc_id BIGINT, bands ARRAY<BIGINT>, ss ARRAY<BIGINT>, n_sh BIGINT"
+  /** Target size of one compacted file. */
+  private val CompactFileBytes = 64L << 20
 
-  private def fsOf(s: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  private def ingestDir(root: String, id: Long) = s"$root/docs/ingest=$id"
+  private def hwmPath(root: String) = new Path(s"$root/compacted_through")
+
+  private def rawFs(s: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  /** The index's filesystem, once `root` is known not to hold the
+    * two-table layout (bands/ + profiles/) that earlier versions wrote:
+    * read as this layout it would answer from an empty docs/, and read
+    * as "no index" it would invite a wipe-and-rebuild of the caller's
+    * corpus. [[build]] / [[buildDocs]] replace it. */
+  private def fsOf(s: SparkSession, root: String): FileSystem = {
+    val fs = rawFs(s, root)
+    if (Seq("bands", "profiles").exists(d => fs.exists(new Path(root, d))))
+      throw new IllegalStateException(s"$root holds the retired two-table " +
+        "dedup index layout (bands/ + profiles/), which this version " +
+        "does not read — rebuild it with DedupIndex.build or buildDocs")
+    fs
+  }
 
   /** Highest ingest id folded by a [[compact]] (−1 if never compacted):
     * appends at or below it are refused — their documents are already
     * in the compacted partition, and re-appending would duplicate every
-    * band and profile row (the InvertedIndex high-water-mark rule). */
+    * row (the InvertedIndex high-water-mark rule). */
   def compactedThrough(s: SparkSession, root: String): Long = {
     val fs = fsOf(s, root)
     if (!fs.exists(hwmPath(root))) -1L
@@ -76,56 +91,91 @@ object DedupIndex {
     }
   }
 
-  /** Ingest ids committed on BOTH artifact sides (profiles are written
-    * last, so a torn append shows bands without profiles and is
-    * excluded — folding it would bake half a batch into ingest 0). */
-  private def committedIngests(s: SparkSession, root: String): Seq[Long] = {
+  /** Committed ingest ids: partitions whose `_SUCCESS` marker exists. A
+    * torn append (no marker) is excluded, so its partial rows never
+    * answer a query and never fold into a compaction. */
+  private[graft] def committedIngests(s: SparkSession, root: String)
+      : Seq[Long] = {
     val fs = fsOf(s, root)
-    def ids(dir: String): Set[Long] = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(p)) Set.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("ingest="))
-        .filter(st => fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix("ingest=").toLong).toSet
-    }
-    (ids(bandsDir(root)) intersect ids(profilesDir(root))).toSeq.sorted
+    val dir = new Path(s"$root/docs")
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("ingest=") &&
+        fs.exists(new Path(st.getPath, "_SUCCESS")))
+      .map(_.getPath.getName.stripPrefix("ingest=").toLong).sorted
   }
 
-  /** True iff an index exists under `root` (the backfill's profiles are
-    * written last, so their _SUCCESS marker implies the whole artifact).
+  /** True iff an index exists under `root` (its backfill partition is
+    * committed); throws on the retired two-table layout (see [[fsOf]]).
     * Side effect by design: first repairs any compaction swap a crash
     * tore mid-rename (util.AtomicSwap.recover — the compacted artifact,
     * complete but not yet promoted, is moved into place), so a torn
     * swap heals on first touch instead of reading as "no index" and
     * baiting callers into a wipe-and-rebuild over the orphaned fold. */
   def exists(s: SparkSession, root: String): Boolean = {
-    val fs = fsOf(s, root)
-    graft.util.AtomicSwap.recover(
-      fs, new org.apache.hadoop.fs.Path(root), "compacted_through")
-    fs.exists(new org.apache.hadoop.fs.Path(
-      s"${profilesDir(root)}/ingest=0/_SUCCESS"))
+    AtomicSwap.recover(rawFs(s, root), new Path(root), "compacted_through")
+    fsOf(s, root).exists(new Path(ingestDir(root, 0L), "_SUCCESS"))
   }
 
-  /** Per-doc profile rows (doc_id, ss: sorted shingle array, n_sh) from
-    * (doc_id, shingle) rows — the exact-verify artifact. */
-  private[graft] def profiles(shingleRows: DataFrame): DataFrame =
-    shingleRows.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("shingle"))).as("ss"),
-           count(lit(1)).as("n_sh"))
+  /** The stored rows of the given committed ingests. Static schema and
+    * explicit partition paths: no footer inference and no listing of
+    * uncommitted partitions. */
+  private def stored(s: SparkSession, root: String,
+                    ingests: Seq[Long]): DataFrame = {
+    require(ingests.nonEmpty, s"no committed dedup index under $root")
+    s.read.schema(RowSchema).parquet(ingests.map(ingestDir(root, _)): _*)
+  }
+
+  /** Stored rows from (doc_id, shingle:int64) rows (Graft.shingleRows):
+    * one doc_id aggregate yields the sorted set and the signature. */
+  private def rowsOfShingles(shingleRows: DataFrame, k: Int, b: Int,
+                             r: Int): DataFrame = {
+    val aggs = sort_array(collect_list(col("shingle"))).as("ss") +:
+      count(lit(1)).as("n_sh") +: MinHashLSH.signatureAggs(k)
+    shingleRows.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id"), MinHashLSH.bandHashes(
+          (0 until k).map(i => col(s"mh$i")), b, r).as("bands"),
+        col("ss"), col("n_sh"))
+  }
+
+  /** Stored rows from raw (doc_id, text) documents through the profile
+    * kernel (functions.ShingleProfile): one pure map per document, where
+    * the shingle-row form pays a doc_id exchange — same rows
+    * (DedupIndexSpec pins the two tables equal). Sub-nGram documents
+    * drop, as Graft.shingleRows drops them: the filter tests the token
+    * count rather than the kernel's null result, because Catalyst
+    * pushes a filter on `p` below the projection and would run the
+    * kernel twice per document. */
+  private[graft] def rowsOfDocs(docs: DataFrame, k: Int = 16, b: Int = 8,
+                                r: Int = 2): DataFrame =
+    docs.filter(size(split(col("text"), " ")) >= 3)
+      .select(col("doc_id"), graft.functions.ShingleProfile.profile(
+        split(col("text"), " "), 3, k).as("p"))
+      .select(col("doc_id"), MinHashLSH.bandHashes(
+          (0 until k).map(i => element_at(col("p.mh"), i + 1)), b, r)
+          .as("bands"),
+        col("p.ss").as("ss"), size(col("p.ss")).cast("long").as("n_sh"))
 
   /** Signature the initial corpus (the backfill) and persist the index
     * as ingest partition 0, wiping any previous artifact under `root`.
     * `shingleRows` = (doc_id, shingle:int64) rows (Graft.shingleRows). */
   def build(shingleRows: DataFrame, root: String, k: Int = 16, b: Int = 8,
             r: Int = 2): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(
-      shingleRows.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    writeRows(shingleRows, root, 0L, k, b, r)
+    wipe(shingleRows.sparkSession, root)
+    writeIngest(rowsOfShingles(shingleRows, k, b, r), root, 0L)
+  }
+
+  /** [[build]] from raw documents through the profile kernel. */
+  def buildDocs(docs: DataFrame, root: String, k: Int = 16, b: Int = 8,
+                r: Int = 2): Unit = {
+    wipe(docs.sparkSession, root)
+    writeIngest(rowsOfDocs(docs, k, b, r), root, 0L)
+  }
+
+  private def wipe(s: SparkSession, root: String): Unit = {
+    val fs = rawFs(s, root)
+    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
   }
 
   /** Incrementally index an accepted batch as ingest partition
@@ -136,303 +186,120 @@ object DedupIndex {
     * exactly idempotent. */
   def append(shingleRows: DataFrame, root: String, ingestId: Long,
              k: Int = 16, b: Int = 8, r: Int = 2): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the backfill): $ingestId")
-    writeRows(shingleRows, root, ingestId, k, b, r)
-  }
-
-  private def writeRows(shingleRows: DataFrame, root: String,
-                        ingestId: Long, k: Int, b: Int, r: Int): Unit =
-    writePrepared(MinHashLSH.bands(MinHashLSH.signatures(shingleRows, k),
-      b, r), profiles(shingleRows), root, ingestId)
-
-  /** The doc-grain (profile-kernel) signature pass shared by
-    * [[buildDocs]] / [[appendDocs]] / [[queryBatchDocs]]: ONE pure-map
-    * kernel per document (functions.ShingleProfile) yields the sorted
-    * shingle profile AND the MinHash signature with zero exchanges,
-    * where the exploded shingle-row form paid two corpus-scale doc_id
-    * exchanges (the 16-min signature aggregate + the
-    * sort_array(collect_list) profile aggregate) plus the exploded
-    * frame's checkpoint. Law-pinned row-identical to the exploded form
-    * in DedupIndexSpec. Returns the checkpointed doc-grain frame
-    * (doc_id, ss, n_sh, mh) — sub-nGram docs (the shingleRows filter)
-    * already dropped. */
-  private[graft] def docProfiles(docs: DataFrame, nGram: Int = 3,
-                                 k: Int = 16): DataFrame =
-    docs.select(col("doc_id"),
-        graft.functions.ShingleProfile.profile(
-          split(col("text"), " "), nGram, k).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("doc_id"), col("p.ss").as("ss"),
-        size(col("p.ss")).cast("long").as("n_sh"), col("p.mh").as("mh"))
-      .localCheckpoint(true) // feeds bands + profiles + the size gates
-
-  /** [[build]] from raw documents through the profile kernel — same
-    * stored rows (DedupIndexSpec pins artifact equality), one kernel
-    * pass instead of two corpus-scale exchanges. */
-  def buildDocs(docs: DataFrame, root: String, k: Int = 16, b: Int = 8,
-                r: Int = 2): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val dp = docProfiles(docs, k = k)
-    writePrepared(MinHashLSH.bandsFromArray(dp, b, r),
-      dp.select("doc_id", "ss", "n_sh"), root, 0L)
+    requireAppendable(shingleRows.sparkSession, root, ingestId)
+    writeIngest(rowsOfShingles(shingleRows, k, b, r), root, ingestId)
   }
 
   /** [[append]] from raw documents through the profile kernel. */
   def appendDocs(docs: DataFrame, root: String, ingestId: Long,
                  k: Int = 16, b: Int = 8, r: Int = 2): Unit = {
+    requireAppendable(docs.sparkSession, root, ingestId)
+    writeIngest(rowsOfDocs(docs, k, b, r), root, ingestId)
+  }
+
+  private def requireAppendable(s: SparkSession, root: String,
+                                ingestId: Long): Unit = {
     require(ingestId > 0, s"ingestId must be > 0 (0 is the backfill): $ingestId")
-    val dp = docProfiles(docs, k = k)
-    writePrepared(MinHashLSH.bandsFromArray(dp, b, r),
-      dp.select("doc_id", "ss", "n_sh"), root, ingestId)
+    val hwm = compactedThrough(s, root)
+    require(ingestId > hwm,
+      s"ingest $ingestId was already folded by a compaction (high-water " +
+        s"mark $hwm) — re-appending it would duplicate every document")
   }
 
-  /** [[queryBatch]] from raw documents through the profile kernel —
-    * the batch side reaches the band join with ZERO exchanges (and the
-    * verify join reads the profile straight off the same frame). */
-  def queryBatchDocs(s: SparkSession, root: String, batchDocs: DataFrame,
-                     k: Int = 16, b: Int = 8, r: Int = 2,
-                     threshold: Double = 0.8,
-                     docBroadcastLimit: Long = 20000L,
-                     pairBroadcastLimit: Long = 100000L): DataFrame = {
-    val dp = docProfiles(batchDocs, k = k)
-    queryPrepared(s, root, MinHashLSH.bandsFromArray(dp, b, r),
-      dp.select("doc_id", "ss", "n_sh"), threshold,
-      docBroadcastLimit, pairBroadcastLimit)
-  }
-
-  /** [[append]] from PRECOMPUTED (bands, profiles) frames — the ingest
-    * path computes them once per batch and shares them across the
-    * within-batch pairing, the stored-index query, and this write.
-    *
-    * FILE-COUNT discipline (the small-file problem, measured): every
-    * batch's queryBatch re-scans the whole stored index, and Spark pays
-    * a per-FILE open cost (openCostInBytes bin-packing, footer read,
-    * stream open) — with shuffle-partition-many files per ingest the
-    * 40k-doc stream bench degraded to ~16 s/batch by batch 40, ~7 s of
-    * which was just opening ~700 accumulated small files per scan. So:
-    * the BACKFILL (ingest 0, corpus-sized) keeps the band_idx
-    * repartition for parallel scan bandwidth, while INCREMENTS (batch-
-    * sized by the queryBatch→append contract) each write ONE band file
-    * and ONE profile file, globally sorted on the probe key so row-group
-    * min/max pruning still applies. A long-running deployment
-    * additionally compacts old increments into the backfill partition —
-    * same answer, bounded file count. */
-  private[graft] def writePrepared(bd: DataFrame, pf: DataFrame,
-                                   root: String, ingestId: Long): Unit = {
-    if (ingestId > 0L) {
-      val hwm = compactedThrough(bd.sparkSession, root)
-      require(ingestId > hwm,
-        s"ingest $ingestId was already folded by a compaction (high-water " +
-          s"mark $hwm) — re-appending it would duplicate every document")
-    }
-    // sorted on the probe key: bucket lookups skip row groups via
-    // parquet min/max stats instead of scanning every band file
-    val bands =
-      if (ingestId == 0L) bd.repartition(col("band_idx"))
-      else bd.repartition(1)
-    bands.sortWithinPartitions("band_idx", "band_hash")
-      .write.mode("overwrite").parquet(s"${bandsDir(root)}/ingest=$ingestId")
-    val profs = if (ingestId == 0L) pf else pf.coalesce(1)
-    profs.write.mode("overwrite")
-      .parquet(s"${profilesDir(root)}/ingest=$ingestId")
-  }
+  /** Write stored rows as ingest partition `ingestId`: one write, one
+    * `_SUCCESS` marker. FILE-COUNT discipline (the small-file problem,
+    * measured): every query re-scans the whole stored index and Spark
+    * pays a per-FILE open cost — with shuffle-partition-many files per
+    * ingest the 40k-doc stream bench degraded to ~16 s/batch by batch
+    * 40, ~7 s of which was opening ~700 small files per scan. So the
+    * BACKFILL (ingest 0, corpus-sized) keeps its input partitioning for
+    * parallel scan bandwidth, an INCREMENT (batch-sized by the
+    * queryBatch→append contract) writes ONE file, and [[compact]] folds
+    * the increments back into a bounded file count. The high-water mark
+    * is the caller's to check (see [[append]]). */
+  private[graft] def writeIngest(rows: DataFrame, root: String,
+                                 ingestId: Long): Unit =
+    (if (ingestId == 0L) rows else rows.coalesce(1))
+      .write.mode("overwrite").parquet(ingestDir(root, ingestId))
 
   /** Near-duplicate pairs (batch_doc, corpus_doc, jaccard) between an
-    * incoming batch and the STORED corpus index: banded candidates from
-    * the band artifact, exact Jaccard >= `threshold` from the profile
-    * artifact. The corpus documents themselves are never read — only
-    * their (8-byte band rows, shingle profiles) at rest. */
-  /** `docBroadcastLimit` / `pairBroadcastLimit` expose the adaptive-pick
-    * thresholds (tests pin the shuffle branch by forcing them to 0; the
-    * defaults are the production gates). */
+    * incoming batch and the STORED corpus index, exact Jaccard >=
+    * `threshold`. The corpus documents themselves are never read — only
+    * their stored rows. */
   def queryBatch(s: SparkSession, root: String, batchShingles: DataFrame,
                  k: Int = 16, b: Int = 8, r: Int = 2,
-                 threshold: Double = 0.8,
-                 docBroadcastLimit: Long = 20000L,
-                 pairBroadcastLimit: Long = 100000L): DataFrame = {
-    // Adaptive plan picks need SIZE FACTS, which cost bounded jobs (the
-    // same trade AQE makes): checkpoint the batch shingles once so the
-    // two decision counts never re-run the shingling, then key EACH
-    // broadcast on the size of the frame it actually ships —
-    //   bands join:    payload = batch BAND rows        → gate on docs
-    //   profiles join: payload = candidate PAIRS × full shingle sets
-    //                  → gate on PAIR count (a small batch against a
-    //                    high-duplication corpus can fan out to millions
-    //                    of pairs; doc count alone would still OOM the
-    //                    driver — the round-10 review catch)
-    val batchSh = batchShingles.localCheckpoint(true)
-    queryPrepared(s, root,
-      MinHashLSH.bands(MinHashLSH.signatures(batchSh, k), b, r),
-      profiles(batchSh), threshold, docBroadcastLimit, pairBroadcastLimit)
-  }
+                 threshold: Double = 0.8): DataFrame =
+    crossPairs(s, root, rowsOfShingles(batchShingles, k, b, r), threshold)
 
-  /** The stored band rows across every COMMITTED ingest — `_SUCCESS`
-    * in BOTH table dirs (the [[committedIngests]] intersection: bands
-    * are written before profiles, so a crash between the two leaves
-    * committed bands whose candidates would verify against NO profile
-    * row and silently drop real pairs until the replay). Restricting
-    * here is a static partition filter (pruned at listing, no data
-    * read) — the FrameIndex.stored discipline; before it, a crashed
-    * append's partial band/profile rows answered queries wrongly until
-    * redelivery. Static schema: footer inference is a Spark job the
-    * streaming ingest would pay per micro-batch. */
-  private[graft] def storedBands(s: SparkSession, root: String): DataFrame = {
-    val inSet = committedIngests(s, root).map(java.lang.Long.valueOf)
-    s.read.schema("doc_id BIGINT, band_idx INT, band_hash BIGINT, ingest BIGINT")
-      .parquet(bandsDir(root))
-      .filter(col("ingest").isin(inSet: _*))
-      .select("doc_id", "band_idx", "band_hash")
-  }
+  /** [[queryBatch]] from raw documents through the profile kernel — the
+    * batch side reaches the probe with ZERO exchanges. */
+  def queryBatchDocs(s: SparkSession, root: String, batchDocs: DataFrame,
+                     k: Int = 16, b: Int = 8, r: Int = 2,
+                     threshold: Double = 0.8): DataFrame =
+    crossPairs(s, root, rowsOfDocs(batchDocs, k, b, r), threshold)
 
-  /** The stored profile rows across every committed ingest — see
-    * [[storedBands]]. */
-  private[graft] def storedProfiles(s: SparkSession, root: String)
-      : DataFrame = {
-    val inSet = committedIngests(s, root).map(java.lang.Long.valueOf)
-    s.read.schema(
-        "doc_id BIGINT, ss ARRAY<BIGINT>, n_sh BIGINT, ingest BIGINT")
-      .parquet(profilesDir(root))
-      .filter(col("ingest").isin(inSet: _*))
-      .select("doc_id", "ss", "n_sh")
-  }
+  private def crossPairs(s: SparkSession, root: String, batch: DataFrame,
+                         threshold: Double): DataFrame =
+    screen(stored(s, root, committedIngests(s, root))
+        .withColumn("is_stored", lit(true)), batch, threshold)
+      .select(col("p_a").as("batch_doc"), col("p_b").as("corpus_doc"),
+        col("jaccard"))
 
-  /** [[queryBatch]] from PRECOMPUTED (bands, profiles) frames — pass
-    * checkpointed frames (the ingest path shares one band/profile pass
-    * across three consumers; an unmaterialized plan here would re-run
-    * the signature aggregation for the two size-fact counts). */
-  private[graft] def queryPrepared(s: SparkSession, root: String,
-                                   batchBandsRaw: DataFrame,
-                                   batchProfiles: DataFrame,
-                                   threshold: Double = 0.8,
-                                   docBroadcastLimit: Long = 20000L,
-                                   pairBroadcastLimit: Long = 100000L)
-      : DataFrame = {
-    // profiles are one row per (shingled) doc, so this IS the doc count
-    val nBatch = batchProfiles.count()
-    def docSized(df: DataFrame): DataFrame =
-      if (nBatch <= docBroadcastLimit) broadcast(df) else df
-    val batchBands = batchBandsRaw.withColumnRenamed("doc_id", "batch_doc")
-    // candidate generation: batch bands broadcast (increment) or
-    // shuffled (backfill), stored bands stream either way
-    val cands = storedBands(s, root)
-      .join(docSized(batchBands), Seq("band_idx", "band_hash"))
-      .select(col("batch_doc"), col("doc_id").as("corpus_doc"))
-      .distinct()
-      .localCheckpoint(true) // two-long rows; reused by count + join
-    val nPairs = cands.count()
-    def pairSized(df: DataFrame): DataFrame =
-      if (nPairs <= pairBroadcastLimit) broadcast(df) else df
-    // exact verify: candidates (pair-bounded) against the stored
-    // profiles; batch profiles computed in flight
-    val verified = cands
-      .join(batchProfiles
-              .select(col("doc_id").as("batch_doc"), col("ss").as("sa"),
-                      col("n_sh").as("n_a")), Seq("batch_doc"))
-    storedProfiles(s, root)
-      .select(col("doc_id").as("corpus_doc"), col("ss").as("sb"),
-              col("n_sh").as("n_b"))
-      .join(pairSized(verified), Seq("corpus_doc"))
-      .withColumn("n_inter",
-        size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard_raw",
-        col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-      .filter(col("jaccard_raw") >= threshold)
-      .select(col("batch_doc"), col("corpus_doc"),
-              round(col("jaccard_raw"), 6).as("jaccard"))
-  }
-
-  /** The ENTIRE per-batch pair pass of the screen-then-admit loop —
-    * within-batch near-dup pairs AND the batch×stored index query — as
-    * ONE candidate pass (the PHash.ingestScreenFused discipline on the
-    * dedup index): the batch's band rows probe a single unioned
-    * candidate side (stored bands with the batch's own redelivered ids
-    * excluded ∪ the batch bands themselves), one distinct + one
-    * pair-count gate cover both populations, and ONE verify join runs
-    * the exact-Jaccard screen with the stored profiles scanned once
-    * and never shuffled (the batch-side p_a profile always comes from
-    * the broadcast batch frame; the p_b profile from stored ∪ batch —
-    * disjoint id sets once redeliveries are excluded, so each pair
-    * verifies against exactly one profile row per side). Output is
-    * row-identical to
-    * `jaccardPairs(within) ∪ (queryPrepared minus redelivered)` in the
-    * canonical (least, greatest) orientation — pinned against the
-    * unfused pair in DedupIndexSpec, both gate branches. The unfused
-    * form paid the candidate machinery twice (self-join + distinct for
-    * within, band join + distinct + gates for cross) and re-aggregated
-    * the batch shingle sets for the within verify; at micro-batch
-    * grain those duplicated exchanges are wall, not work
-    * (PLANS_r18). */
-  private[graft] def ingestQueryFused(s: SparkSession, root: String,
-                                      bd: DataFrame, pf: DataFrame,
-                                      excludeIds: DataFrame,
-                                      threshold: Double = 0.8,
-                                      docBroadcastLimit: Long = 20000L,
-                                      pairBroadcastLimit: Long = 100000L)
-      : DataFrame = {
-    val nBatch = pf.count()
-    def docSized(df: DataFrame): DataFrame =
-      if (nBatch <= docBroadcastLimit) broadcast(df) else df
-    val batchBands = bd.withColumnRenamed("doc_id", "batch_doc")
-    val candS = storedBands(s, root)
-      .join(docSized(excludeIds.select(col("doc_id"))), Seq("doc_id"),
-        "left_anti") // replay guard: a re-delivered batch is already
-                     // IN the index and must not match itself
-      .select(col("doc_id").as("other_doc"), col("band_idx"),
-        col("band_hash"), lit(true).as("is_stored"))
-    val candB = bd.select(col("doc_id").as("other_doc"), col("band_idx"),
-      col("band_hash"), lit(false).as("is_stored"))
-    val cands = candS.unionByName(candB)
-      .join(docSized(batchBands), Seq("band_idx", "band_hash"))
-      // within pairs canonicalize here (batch < other keeps each
-      // unordered batch pair exactly once — candidatePairsFromBands'
-      // doc_a < doc_b); cross pairs keep every (batch, stored) hit
-      .filter(col("is_stored") || col("batch_doc") < col("other_doc"))
-      .select(col("batch_doc").as("p_a"), col("other_doc").as("p_b"))
-      .distinct()
-      .localCheckpoint(true) // two-long rows; reused by count + join
-    val nPairs = cands.count()
-    def pairSized(df: DataFrame): DataFrame =
-      if (nPairs <= pairBroadcastLimit) broadcast(df) else df
-    // p_a is ALWAYS a batch doc; p_b is batch (within) or stored
-    // (cross) — the profile union serves both sides with the stored
-    // table scanned once (its redelivered rows excluded so a batch
-    // doc's profile resolves uniquely to the batch frame)
-    val withA = cands.join(
-      pf.select(col("doc_id").as("p_a"), col("ss").as("sa"),
-        col("n_sh").as("n_a")), Seq("p_a"))
-    storedProfiles(s, root)
-      .join(docSized(excludeIds.select(col("doc_id"))), Seq("doc_id"),
-        "left_anti")
-      .unionByName(pf)
-      .select(col("doc_id").as("p_b"), col("ss").as("sb"),
-              col("n_sh").as("n_b"))
-      .join(pairSized(withA), Seq("p_b"))
-      .withColumn("n_inter",
-        size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard_raw",
-        col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-      .filter(col("jaccard_raw") >= threshold)
+  /** The pair pass of [[graft.streaming.Streams.dedupIndexIngest]]:
+    * near-dup pairs (doc_a < doc_b, jaccard) WITHIN the `batch` rows and
+    * between them and the stored `ingests`, as one scan — the stored
+    * docs whose ids the batch re-delivers are anti-joined away (a
+    * replayed batch is already IN the index and must not match itself),
+    * and the batch rows are unioned in for the within pairs. */
+  private[graft] def ingestPairs(s: SparkSession, root: String,
+                                 ingests: Seq[Long], batch: DataFrame,
+                                 threshold: Double = 0.8): DataFrame = {
+    val others = stored(s, root, ingests)
+      .join(batch.select("doc_id"), Seq("doc_id"), "left_anti")
+      .withColumn("is_stored", lit(true))
+      .unionByName(batch.withColumn("is_stored", lit(false)))
+    screen(others, batch, threshold)
       .select(least(col("p_a"), col("p_b")).as("doc_a"),
-              greatest(col("p_a"), col("p_b")).as("doc_b"),
-              round(col("jaccard_raw"), 6).as("jaccard"))
+        greatest(col("p_a"), col("p_b")).as("doc_b"), col("jaccard"))
+  }
+
+  /** (p_a, p_b, jaccard): every `batch` doc p_a against every `others`
+    * doc p_b (stored rows, `is_stored`, and — on the ingest path — the
+    * batch's own rows, paired only as p_a < p_b) with exact Jaccard >=
+    * `threshold`, each pair once, at the first band index the two docs
+    * share (see the object Scaladoc). */
+  private def screen(others: DataFrame, batch: DataFrame,
+                     threshold: Double): DataFrame = {
+    val probe = batch.select(col("doc_id").as("p_a"),
+      col("bands").as("bands_a"), col("ss").as("sa"), col("n_sh").as("n_a"),
+      posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+    others.select(col("doc_id").as("p_b"), col("bands").as("bands_b"),
+        col("ss").as("sb"), col("n_sh").as("n_b"), col("is_stored"),
+        posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
+      .join(probe, Seq("band_idx", "band_hash"))
+      .filter(col("is_stored") || col("p_a") < col("p_b"))
+      .filter(array_position(zip_with(col("bands_a"), col("bands_b"),
+        _ === _), true) === col("band_idx") + 1)
+      .withColumn("n_inter",
+        size(array_intersect(col("sa"), col("sb"))).cast("long"))
+      .withColumn("jaccard_raw",
+        col("n_inter").cast("double") /
+          (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
+      .filter(col("jaccard_raw") >= threshold)
+      .select(col("p_a"), col("p_b"),
+        round(col("jaccard_raw"), 6).as("jaccard"))
   }
 
   /** Fold every committed ingest partition into a single ingest-0
-    * partition set — the index-maintenance step a continuously-ingesting
-    * dedup deployment runs periodically: each streamed append leaves one
-    * small band file + one profile file, every queryBatch re-scans the
-    * whole artifact, and Spark pays a per-FILE open cost, so probe cost
-    * degrades with file COUNT even though the row volume is unchanged
-    * (measured on the stream bench — see writePrepared's Scaladoc).
-    * Band and profile ROWS are preserved exactly, so every query
-    * answers identically before and after (pinned in DedupIndexSpec) —
-    * only the physical layout changes, and the rewrite lands in the
-    * backfill layout (band_idx-partitioned, probe-key-sorted).
+    * partition — the index-maintenance step a continuously-ingesting
+    * dedup deployment runs periodically: each streamed append leaves
+    * one small file, every query re-scans the whole artifact, and Spark
+    * pays a per-FILE open cost, so probe cost degrades with file COUNT
+    * even though the row volume is unchanged (see [[writeIngest]]).
+    * Rows are preserved exactly, so every query answers identically
+    * before and after (pinned in DedupIndexSpec). One write, with no
+    * shuffle: the writer count derives from the committed bytes on disk
+    * (a listing, not a Spark job), one writer per 64 MB, at most 64.
     *
     * Staged write + two-rename swap (util.AtomicSwap — the shared
     * compaction discipline): the fold lands completely under
@@ -442,20 +309,23 @@ object DedupIndex {
     * either the old root rolls back or the completed fold is promoted —
     * never a missing artifact, never a half-compacted index that
     * answers wrongly. The high-water mark travels with the artifact:
-    * writePrepared refuses any ingest id a future re-delivery might
+    * [[append]] refuses any ingest id a future re-delivery might
     * duplicate. */
   def compact(s: SparkSession, root: String): Unit = {
     require(exists(s, root), s"no dedup index under $root")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = fsOf(s, root)
-    val stagingPath = graft.util.AtomicSwap.stagingPath(rootPath)
-    val staging = stagingPath.toString
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-    val committed = committedIngests(s, root)
-    writePrepared(storedBands(s, root), storedProfiles(s, root), staging, 0L)
-    val hwm = math.max(committed.max, compactedThrough(s, root))
-    val out = fs.create(hwmPath(staging), true)
+    val staging = AtomicSwap.stagingPath(rootPath)
+    if (fs.exists(staging)) fs.delete(staging, true)
+    val ingests = committedIngests(s, root)
+    val bytes = ingests.map(id =>
+      fs.getContentSummary(new Path(ingestDir(root, id))).getLength).sum
+    val writers = math.min(64L, bytes / CompactFileBytes + 1).toInt
+    stored(s, root, ingests).coalesce(writers)
+      .write.parquet(ingestDir(staging.toString, 0L))
+    val hwm = math.max(ingests.max, compactedThrough(s, root))
+    val out = fs.create(hwmPath(staging.toString), true)
     try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()
-    graft.util.AtomicSwap.promote(fs, rootPath)
+    AtomicSwap.promote(fs, rootPath)
   }
 }

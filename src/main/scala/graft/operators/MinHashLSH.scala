@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** MinHash + banded LSH over shingle sets — the 100-TB candidate generator
@@ -16,43 +16,35 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLSH {
 
-  /** k-permutation MinHash signature per doc from (doc_id, shingle:int64)
-    * rows: sig_s = min over shingles of xxhash64(shingle, s). */
+  /** The k MinHash aggregates over (doc_id, shingle:int64) rows:
+    * mh_s = min over shingles of xxhash64(shingle, s). */
+  def signatureAggs(k: Int): Seq[Column] =
+    (0 until k).map(s => min(xxhash64(col("shingle"), lit(s))).as(s"mh$s"))
+
+  /** k-permutation MinHash signature per doc (doc_id, mh0..mh{k-1}). */
   def signatures(shingleRows: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map(s =>
-      min(xxhash64(col("shingle"), lit(s))).as(s"mh$s"))
+    val aggs = signatureAggs(k)
     shingleRows.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** (doc_id, band_idx, band_hash) — one row per band; band_hash folds the
-    * band's r signature components plus the band index. */
-  def bands(sig: DataFrame, b: Int, r: Int): DataFrame = {
-    val bandCols = (0 until b).map { bi =>
-      val parts = (0 until r).map(ri => col(s"mh${bi * r + ri}"))
-      struct(lit(bi).as("band_idx"),
-             xxhash64(parts :+ lit(bi): _*).as("band_hash")).as(s"b$bi")
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_idx").as("band_idx"),
-              col("band.band_hash").as("band_hash"))
+  /** A doc's b band hashes as one array: position bi is
+    * xxhash64(mh[bi·r], …, mh[bi·r+r−1], bi) over the signature
+    * components `mh` (in order). The single definition of a band — the
+    * stored DedupIndex row keeps this array, and [[bands]] explodes
+    * it. */
+  def bandHashes(mh: Seq[Column], b: Int, r: Int): Column = {
+    require(b * r <= mh.size,
+      s"bands($b)×rows($r) exceed signature length ${mh.size}")
+    array((0 until b).map(bi =>
+      xxhash64((0 until r).map(ri => mh(bi * r + ri)) :+ lit(bi): _*)): _*)
   }
 
-  /** [[bands]] from a signature ARRAY column (doc_id, mh: array<long>)
-    * — the kernel-profile form (functions.ShingleProfile): band_hash =
-    * xxhash64(mh[bi·r+1..], bi) over element_at projections, the SAME
-    * expression the column form folds over its mh columns, so values
-    * are bit-identical by construction. */
-  def bandsFromArray(sig: DataFrame, b: Int, r: Int): DataFrame = {
-    val bandCols = (0 until b).map { bi =>
-      val parts = (0 until r).map(ri =>
-        element_at(col("mh"), bi * r + ri + 1)) :+ (lit(bi): org.apache.spark.sql.Column)
-      struct(lit(bi).as("band_idx"),
-             xxhash64(parts: _*).as("band_hash")).as(s"b$bi")
-    }
-    sig.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_idx").as("band_idx"),
-              col("band.band_hash").as("band_hash"))
-  }
+  /** (doc_id, band_idx, band_hash) — one row per band of a signature
+    * frame with mh0..mh{b·r−1} columns. */
+  def bands(sig: DataFrame, b: Int, r: Int): DataFrame =
+    sig.select(col("doc_id"), posexplode(bandHashes(
+        (0 until b * r).map(i => col(s"mh$i")), b, r))
+      .as(Seq("band_idx", "band_hash")))
 
   /** Asymmetric (cross-corpus) candidate pairs: every (doc_a ∈ A,
     * doc_b ∈ B) sharing at least one band bucket — the contamination /
@@ -79,16 +71,7 @@ object MinHashLSH {
   def candidatePairs(shingleRows: DataFrame, k: Int = 16, b: Int = 8,
                      r: Int = 2): DataFrame = {
     require(b * r <= k, s"bands($b)×rows($r) exceed signature length $k")
-    candidatePairsFromBands(bands(signatures(shingleRows, k), b, r))
-  }
-
-  /** [[candidatePairs]] from a PRECOMPUTED band table — for callers that
-    * already hold (and typically checkpointed) the bands because several
-    * consumers share them (the dedup-index ingest path computes bands
-    * once per batch for within-batch pairing, the stored-index query,
-    * AND the append — re-deriving signatures per consumer tripled the
-    * most expensive stage of the batch). */
-  def candidatePairsFromBands(bd: DataFrame): DataFrame = {
+    val bd = bands(signatures(shingleRows, k), b, r)
     val left = bd.select(col("doc_id").as("doc_a"), col("band_idx"),
                          col("band_hash"))
     val right = bd.select(col("doc_id").as("doc_b"), col("band_idx"),

@@ -447,7 +447,7 @@ object PHash {
         // n_frb, not n_fr: the stored rows carry their own n_fr column
         size(col("fhs")).cast("long").as("n_frb"),
         explode(col("fhs")).as("bhash"))
-    // adaptive pick (the DedupIndex.queryBatch discipline): a
+    // adaptive pick: a
     // micro-batch-sized input ships as a broadcast so the stored
     // corpus never shuffles; a corpus-scale BACKFILL WAVE crosses the
     // gate and takes the plain equi-join (AQE plans the exchange) —

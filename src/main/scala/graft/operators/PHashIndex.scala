@@ -117,7 +117,7 @@ object PHashIndex {
   }
 
   /** Write one ingest's banded rows. File-count discipline (the
-    * measured small-file trap — DedupIndex.writePrepared's Scaladoc):
+    * measured small-file trap — DedupIndex.writeIngest's Scaladoc):
     * the backfill keeps the band_idx repartition for parallel scan
     * bandwidth; increments (batch-sized by the query→append contract)
     * write ONE file, globally sorted on the probe key so row-group
@@ -153,10 +153,9 @@ object PHashIndex {
   /** Near-duplicate pairs (batch_doc, corpus_doc, hamming ≤ maxHamming)
     * between an incoming batch and the STORED index. The corpus images
     * are never read — only their 8-byte signatures at rest. Recall is
-    * exact (pigeonhole: maxHamming < b); the adaptive broadcast gate is
-    * the DedupIndex.queryBatch discipline — an increment ships
-    * map-side, a corpus-scale backfill wave crosses the gate and AQE
-    * plans the band-keyed exchange. */
+    * exact (pigeonhole: maxHamming < b); with the adaptive broadcast
+    * gate an increment ships map-side, a corpus-scale backfill wave
+    * crosses the gate and AQE plans the band-keyed exchange. */
   def queryBatch(s: SparkSession, root: String, batchDocs: DataFrame,
                  maxHamming: Int = 3, b: Int = 4,
                  docBroadcastLimit: Long = 20000L): DataFrame = {

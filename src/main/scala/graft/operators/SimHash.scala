@@ -153,8 +153,8 @@ object SimHash {
     val sig = grainedSignatures(docs, idCol, textCol)
       .repartition(nP, col("simhash")).sortWithinPartitions("simhash")
       .localCheckpoint(true)
-    // Adaptive broadcast gate on the EXPANSION joins (the screenFrames /
-    // DedupIndex.queryBatch discipline): their output is the quadratic
+    // Adaptive broadcast gate on the EXPANSION joins (the screenFrames
+    // discipline): their output is the quadratic
     // pair set — the one thing this key materializes by contract — and a
     // sort-merge plan must SORT that output-sized stream, while a
     // broadcast-hash plan streams it straight through codegen. The sig

@@ -72,8 +72,8 @@ object VectorSimJoin {
   private def cellsFor(n: Long): Int =
     math.max(16, math.min(512, math.ceil(math.sqrt(n.toDouble)).toInt))
 
-  /** Broadcast the corpus when it fits comfortably in executor memory —
-    * the DedupIndex.queryBatch adaptive-pick discipline. Session conf
+  /** Broadcast the corpus when it fits comfortably in executor memory
+    * (an adaptive broadcast-or-shuffle pick). Session conf
     * (tests force the shuffle path with 0); the default is the same
     * 256 MB bound under which the old plan broadcast its b-side block
     * set, so the memory story is unchanged. */

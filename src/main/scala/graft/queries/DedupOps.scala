@@ -692,11 +692,11 @@ object DedupOps {
     // ---- MinHash/LSH dedup index AT REST (operators.DedupIndex): the
     // artifact form of q_dedup_minhash, and the INCREMENTAL dedup shape —
     // the corpus (doc_id % 5 != 0, standing in for the already-indexed
-    // 100-TB store) is signatured once into a stored band + profile
-    // index; the incoming batch (doc_id % 5 == 0, a day's documents) is
-    // signatured in flight and deduped against the index with ZERO
-    // corpus shuffle (batch bands broadcast; stored bands/profiles
-    // stream). First call per (session, sf) builds the artifact, every
+    // 100-TB store) is signatured once into the stored docs table (band
+    // hashes + sorted shingle set per doc); the incoming batch (doc_id %
+    // 5 == 0, a day's documents) is signatured in flight and deduped
+    // against the index with ZERO corpus shuffle (batch bands broadcast;
+    // the stored docs stream). First call per (session, sf) builds the artifact, every
     // later call — and any real deployment, where the build is the
     // initial backfill — answers purely from storage. SQL-oracled like
     // q_dedup_minhash: exact-Jaccard verify makes precision exact, and
@@ -721,7 +721,7 @@ object DedupOps {
     // DedupIndexSpec) folded into a single ingest-0 partition set, then
     // the q_dedup_index_query probe
     // against the compacted artifact. Compaction is a pure physical-
-    // layout change (band/profile rows preserved exactly, high-water
+    // layout change (stored rows preserved exactly, high-water
     // mark refuses re-appends of folded ingests — DedupIndexSpec pins
     // both), so the oracle is the SAME exact-Jaccard recompute as the
     // uncompacted key: answer equality across the rewrite IS the
@@ -749,11 +749,11 @@ object DedupOps {
     // artifact, but the incoming "batch" is CORPUS-SCALE (the 80% side
     // of the split screened against a 20% index — a re-crawl or initial
     // backfill, vs q_dedup_index_query's daily increment). At replica
-    // tiers the batch doc count crosses queryBatch's broadcast gate and
-    // the adaptive pick takes the SHUFFLE branch — the plan that exists
-    // because a forced broadcast of a 100k-doc batch OOMed the 100×
-    // probe. Branch equivalence (shuffle ≡ broadcast, bit-for-bit) and
-    // both plan shapes are pinned in DedupIndexSpec.
+    // tiers the batch outgrows the broadcast threshold and the join
+    // takes the SHUFFLE branch — the plan that exists because a forced
+    // broadcast of a 100k-doc batch OOMed the 100× probe. Branch
+    // equivalence (shuffle ≡ broadcast, bit-for-bit) and both plan
+    // shapes are pinned in DedupIndexSpec.
     "q_dedup_index_backfill" -> ((s, d) => {
       import graft.operators.DedupIndex
       val root = Scans.scratch("dedupbackfill", s, d)

@@ -520,52 +520,45 @@ object Streams {
     * [[graft.operators.DedupIndex]], and the shape a 100-TB corpus
     * actually dedups in: an index at rest (backfilled once, possibly
     * empty), a stream of document batches, and per micro-batch
-    *   (1) WITHIN-batch near-dup pairs via banded-LSH candidates +
-    *       exact-Jaccard verify (the q_dedup_minhash machinery),
-    *   (2) CROSS pairs of the batch against the STORED index — zero
-    *       corpus shuffle (DedupIndex.queryBatch's broadcast-batch plan),
-    *   (3) the union committed as an immutable batchId-named version
-    *       (the upsertBatch exactly-once pattern), and
-    *   (4) the batch appended to the index as its OWN ingest partition.
-    * Every step is idempotent under replay: (3) overwrites the batch's
-    * version, (4) overwrites the batch's ingest partition, and (2)
-    * anti-joins away matches against the batch's own (re-delivered)
-    * rows. The union of committed versions over any batch partitioning
-    * of a corpus equals the corpus-wide exact near-dup pair set — each
-    * pair is emitted exactly once, by whichever batch completes it
-    * (asserted against q_dedup_minhash in StreamingSpec). */
+    *   (1) the batch's stored rows (one profile-kernel pass, persisted)
+    *       appended to the index as its OWN ingest partition;
+    *   (2) ONE pair pass over the stored docs ∪ the batch rows: the
+    *       WITHIN-batch near-dup pairs and the CROSS pairs against the
+    *       index, with zero corpus shuffle for an increment-sized batch
+    *       (DedupIndex.ingestPairs);
+    *   (3) the pairs committed as an immutable batchId-named version
+    *       (the upsertBatch exactly-once pattern).
+    * Appending first means (1) is the job that fills the cache, so (2)
+    * picks broadcast or shuffle from the cached batch's measured size
+    * without a count. The pass reads the ingests committed before (1),
+    * less the batch's own partition, and anti-joins the batch's ids
+    * from them, so the batch meets only its own rows. Every step is
+    * idempotent under replay: (1) overwrites the batch's ingest
+    * partition (or is skipped when a compaction already folded it —
+    * its docs are in ingest 0, and the high-water mark would refuse
+    * it), (2) excludes the re-delivered ids wherever they are stored,
+    * and (3) overwrites the batch's version. A batch costs four Spark
+    * jobs: the append, two broadcasts and the pair write. The union of
+    * committed versions over any batch partitioning of a corpus equals
+    * the corpus-wide exact near-dup pair set — each pair is emitted
+    * exactly once, by whichever batch completes it (asserted against
+    * q_dedup_minhash in StreamingSpec). */
   def dedupIndexIngest(batch: DataFrame, root: String, pairsDir: String,
                        batchId: Long): Unit = {
-    import graft.operators.{DedupIndex, MinHashLSH}
+    import graft.operators.DedupIndex
     val s = batch.sparkSession
     require(DedupIndex.exists(s, root),
       s"no dedup index under $root — build the backfill first (may be empty)")
-    // ONE doc-grain kernel pass per batch (DedupIndex.docProfiles —
-    // checkpointed inside), shared by the fused pair screen AND the
-    // append below: bands and profiles are lazy map-side projections of
-    // the checkpointed frame, so the old exploded-shingle checkpoint,
-    // the band checkpoint, and the profile checkpoint (three actions +
-    // two doc_id exchanges per micro-batch) collapse to one action.
-    // The screen itself — within-batch pairs + the stored-index query
-    // with the batch's own re-delivered rows excluded — runs as ONE
-    // candidate pass with one gate and one verify
-    // (DedupIndex.ingestQueryFused, row-identical to the unfused
-    // within ∪ cross — pinned in DedupIndexSpec).
-    val dp = DedupIndex.docProfiles(batch)
-    val bd = MinHashLSH.bandsFromArray(dp, b = 8, r = 2)
-    val pf = dp.select(col("doc_id"), col("ss"), col("n_sh"))
-    DedupIndex.ingestQueryFused(s, root, bd, pf, excludeIds = batch)
-      .write.mode("overwrite").parquet(versionDir(pairsDir, batchId))
-    // ingest ids start at 1: 0 is the backfill's partition. An
-    // at-least-once RE-DELIVERY of a batch a compaction has since
-    // folded must be SKIPPED, not appended: its documents are already
-    // in the folded ingest-0 partition (so the pair recompute above was
-    // a benign self-overwrite — the anti-join guard holds either way),
-    // and writePrepared's high-water-mark require would otherwise
-    // hard-fail the stream on a replay that used to be idempotent.
+    // ingest ids start at 1: 0 is the backfill's partition
     val ingestId = batchId + 1
-    if (ingestId > DedupIndex.compactedThrough(s, root))
-      DedupIndex.writePrepared(bd, pf, root, ingestId)
+    val ingests = DedupIndex.committedIngests(s, root).filter(_ != ingestId)
+    val rows = DedupIndex.rowsOfDocs(batch).persist()
+    try {
+      if (ingestId > DedupIndex.compactedThrough(s, root))
+        DedupIndex.writeIngest(rows, root, ingestId)
+      DedupIndex.ingestPairs(s, root, ingests, rows)
+        .write.mode("overwrite").parquet(versionDir(pairsDir, batchId))
+    } finally rows.unpersist()
   }
 
   /** s_phash_index_ingest — continuous perceptual-hash dedup, the
