@@ -340,7 +340,7 @@ object BenchStream {
           langDocs.take(refDocs.size).toDF("doc_id", "lang", "text"), model)
         driveForeach(langDocs, Seq("doc_id", "lang", "text"),
           (b, id) => Streams.classifyBatch(b, model, out, id),
-          () => Streams.committedPredictions(spark, out).count())
+          () => Streams.committed(spark, out).count())
       }),
       "s_boilerplate" -> (() => {
         val block = s"$tmpDir/graft_bench_boiler_block"
@@ -353,7 +353,7 @@ object BenchStream {
           .write.mode("overwrite").parquet(block)
         driveForeach(boilerDocs, Seq("doc_id", "text"),
           (b, id) => Streams.boilerplateBatch(b, block, out, id),
-          () => Streams.committedBoilerplate(spark, out).count())
+          () => Streams.committed(spark, out).count())
       }),
       "s_decontam_near" -> (() => {
         val idx = s"$tmpDir/graft_bench_decontam_idx"
@@ -367,7 +367,7 @@ object BenchStream {
             .toDF("doc_id", "text"), idx)
         driveForeach(ingestDocs, Seq("doc_id", "text"),
           (b, id) => Streams.decontamBatch(b, idx, out, id),
-          () => Streams.committedContaminations(spark, out).count())
+          () => Streams.committed(spark, out).count())
       }),
       "s_cluster_assign" -> (() => {
         val cents = s"$tmpDir/graft_bench_cluster_cents"
@@ -380,7 +380,7 @@ object BenchStream {
           .write.mode("overwrite").parquet(cents)
         driveForeach(vecs, Seq("vec_id", "v"),
           (b, id) => Streams.clusterAssign(b, cents, out, id),
-          () => Streams.committedAssignments(spark, out).count())
+          () => Streams.committed(spark, out).count())
       }),
       "s_dedup_frames" -> (() => {
         val idx = s"$tmpDir/graft_bench_frameidx"
@@ -392,7 +392,7 @@ object BenchStream {
           refDocs.toDF("doc_id", "text"), idx)
         driveForeach(ingestDocs, Seq("doc_id", "text"),
           (b, id) => Streams.frameDedupBatch(b, idx, out, id),
-          () => Streams.committedFrameHits(spark, out).count())
+          () => Streams.committed(spark, out).count())
       }),
       "s_text_index_ingest" -> (() => {
         val root = s"$tmpDir/graft_bench_textindex"
@@ -439,7 +439,7 @@ object BenchStream {
           docsN.take(1).toDF("doc_id", "text").filter(lit(false)), root)
         driveForeach(docsN, Seq("doc_id", "text"),
           (b, id) => Streams.frameIndexIngest(b, root, out, id),
-          () => Streams.committedFramePairs(spark, out).count())
+          () => Streams.committed(spark, out).count())
       }),
       // ---- the COMPACT-IN-LOOP regime: the growing-index rows above
       // measure pure ingest, but the production operating point all four
@@ -462,7 +462,7 @@ object BenchStream {
           docsN.take(1).toDF("doc_id", "text").filter(lit(false)), root)
         driveCompacting(docsN, Seq("doc_id", "text"),
           (b, id) => Streams.frameIndexIngest(b, root, out, id),
-          () => Streams.committedFramePairs(spark, out).count(),
+          () => Streams.committed(spark, out).count(),
           root, () => graft.operators.FrameIndex.compact(spark, root))
       }),
       "s_knn_index_ingest_compact" -> (() => {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.functions.VectorExprs
+import graft.util.IndexStore
 
 /** IVF+PQ index AT REST — the artifact-centric half of the ANN stack.
   *
@@ -15,7 +16,11 @@ import graft.functions.VectorExprs
   *
   *   root/centroids/ — (cent_id, cv, cnrm)            k rows
   *   root/codebooks/ — (sub, code_id, cv)             m×kCodes rows
-  *   root/codes/     — (vec_id, codes)  PARTITIONED BY (cell, batch)
+  *   root/codes/     — (vec_id, codes)  PARTITIONED BY (batch, cell)
+  *
+  * in the shared at-rest layout (util.IndexStore: each `batch=N` dir is
+  * one write committed by its marker, plus the compaction high-water
+  * mark and staged swap).
   *
   * The codes table is the corpus at rest: ~m bytes per vector (16 int
   * codes here ≈ 8 information bytes at kCodes=16) instead of dim×8 raw —
@@ -45,64 +50,41 @@ object AnnIndex {
   private def codebooksDir(root: String) = s"$root/codebooks"
   private def codesDir(root: String)     = s"$root/codes"
   private def attrsDir(root: String)     = s"$root/attrs"
-  private def hwmPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/compacted_through")
 
-  private def fsOf(s: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  private[graft] val CentroidsSchema = "cent_id INT, cv ARRAY<DOUBLE>, cnrm DOUBLE"
+  private[graft] val CodebooksSchema = "sub INT, code_id INT, cv ARRAY<DOUBLE>"
+  private[graft] val CodesSchema =
+    "vec_id BIGINT, codes ARRAY<INT>, batch BIGINT, cell INT"
 
   /** True iff a complete index exists under `root` (codes are written
-    * last, so their _SUCCESS marker implies the whole artifact). Side
-    * effect by design: first repairs any compaction swap a crash tore
-    * mid-rename (util.AtomicSwap.recover), so a torn swap heals on
-    * first touch instead of reading as "no index" and baiting callers
-    * into a wipe-and-rebuild over the orphaned fold. */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val fs = fsOf(s, root)
-    graft.util.AtomicSwap.recover(
-      fs, new org.apache.hadoop.fs.Path(root), "compacted_through")
-    fs.exists(new org.apache.hadoop.fs.Path(s"${codesDir(root)}/_SUCCESS"))
-  }
+    * last, so their committed backfill implies the whole artifact).
+    * Heals a torn compaction swap first (util.IndexStore). */
+  def exists(s: SparkSession, root: String): Boolean =
+    IndexStore.exists(s, root, codesDir(root))
 
   /** Highest ingest batch id folded into batch 0 by [[compact]] (−1
     * before any compaction). append() refuses ids at or below it: a
     * foreachBatch re-delivery of an ALREADY-FOLDED batch would
     * otherwise re-create its partitions next to the compacted copies
-    * and double-count every vector's ADC sum at query time (the
-    * DedupIndex/InvertedIndex high-water-mark rule). */
-  def compactedThrough(s: SparkSession, root: String): Long = {
-    val fs = fsOf(s, root)
-    if (!fs.exists(hwmPath(root))) -1L
-    else {
-      val in = fs.open(hwmPath(root))
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+    * and double-count every vector's ADC sum at query time. */
+  def compactedThrough(s: SparkSession, root: String): Long =
+    IndexStore.compactedThrough(s, root)
 
-  /** Ingest batch ids present under the codes table (directory listing,
-    * not a data scan). append() is a single-table write committed by
-    * the Hadoop job-commit protocol, so a present `batch=` directory is
-    * a committed batch — there is no two-table torn-append window here
-    * (contrast InvertedIndex.committedBatches). */
-  private def batchIds(s: SparkSession, root: String): Seq[Long] =
-    fsOf(s, root).globStatus(
-      new org.apache.hadoop.fs.Path(s"${codesDir(root)}/cell=*/batch=*"))
-      match {
-        case null => Nil
-        case st => st.toSeq
-          .map(_.getPath.getName.stripPrefix("batch=").toLong)
-          .distinct.sorted
-      }
+  /** Committed batch ids of the codes table. A batch is visible only
+    * once its whole write committed: the writer moves the batch's cell
+    * dirs into place one by one at job commit, so a crash inside it
+    * leaves some cells only — queried or folded, those would lose the
+    * missing vectors for good once the high-water mark passed them. */
+  private def committedBatches(s: SparkSession, root: String): Seq[Long] =
+    IndexStore.committed(s, codesDir(root))
 
   /** The stored coarse-quantizer model — (cent_id, cv, cnrm), k rows. */
   def centroids(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(centroidsDir(root))
+    s.read.schema(CentroidsSchema).parquet(centroidsDir(root))
 
   /** The stored PQ codebooks — (sub, code_id, cv), m×kCodes rows. */
   def codebooks(s: SparkSession, root: String): DataFrame =
-    s.read.parquet(codebooksDir(root))
+    s.read.schema(CodebooksSchema).parquet(codebooksDir(root))
 
   /** Max-cosine cell assignment against `cents` (a k-row model frame):
     * (vec_id, cell, rv = v − centroid). Shared verbatim by build() and
@@ -142,25 +124,25 @@ object AnnIndex {
     * whole life; filtered queries on a bare index are a loud error,
     * never a silent unfiltered answer). */
   def hasAttrs(s: SparkSession, root: String): Boolean =
-    fsOf(s, root).exists(attrsMarker(root))
+    IndexStore.committed(s, attrsDir(root)).contains(0L)
 
-  /** Explicit sidecar commit marker — the dynamic-partition-overwrite
-    * protocol [[writeAttrs]] uses emits no `_SUCCESS` of its own
-    * (verified on disk), so [[writeAttrs]] creates this after its
-    * write returns; a crash mid-write reads as "no sidecar". */
-  private def attrsMarker(root: String) =
-    new org.apache.hadoop.fs.Path(s"${attrsDir(root)}/_GRAFT_COMMIT")
+  /** The sidecar rows of committed `batches`. The attribute columns are
+    * the caller's, so this one read keeps schema inference. */
+  private def attrRows(s: SparkSession, root: String, batches: Seq[Long])
+      : DataFrame =
+    s.read.option("basePath", attrsDir(root))
+      .parquet(batches.map(IndexStore.part(attrsDir(root), "batch", _)): _*)
 
   /** Write one batch's attribute rows partitioned EXACTLY like the
-    * codes — (cell, batch) hive partitions — so a filtered probe's
+    * codes — (batch, cell) hive partitions — so a filtered probe's
     * `cell IN (…)` prunes the attribute scan at file-listing level the
     * same way it prunes the codes scan (the Vespa/Milvus filtered-ANN
     * layout: attributes ride the index partitioning; a vec_id-keyed
     * side table would re-scan the corpus per probe). Written BEFORE
-    * the batch's codes partition commits: codes-present ⇒
-    * attrs-present, so a crash in the window leaves only orphan attr
-    * rows whose vec_ids never surface (the probe semi-joins FROM the
-    * codes side) and the replay overwrites both. */
+    * the batch's codes commit: codes-committed ⇒ attrs-committed, so a
+    * crash in the window leaves only orphan attr rows whose vec_ids
+    * never surface (the probe semi-joins FROM the codes side) and the
+    * replay overwrites both. */
   private def writeAttrs(attrs: DataFrame, assigned: DataFrame,
                          root: String, batchId: Long): Unit = {
     // Coverage contract, enforced: every vector in the batch MUST have
@@ -176,13 +158,8 @@ object AnnIndex {
       s"vector(s) in batch $batchId have no attrs row; such vectors " +
       "would silently match no filtered query. Supply an attrs row " +
       "per vec_id (null attribute values are fine) or build bare.")
-    attrs.join(assigned.select("vec_id", "cell"), Seq("vec_id"))
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "batch")
-      .parquet(attrsDir(root))
-    fsOf(attrs.sparkSession, root).create(attrsMarker(root), true).close()
+    IndexStore.write(attrs.join(assigned.select("vec_id", "cell"),
+      Seq("vec_id")), attrsDir(root), "batch", batchId, "cell")
   }
 
   /** Train and persist the index. `emb` = (vec_id, v: array<double>)
@@ -194,16 +171,11 @@ object AnnIndex {
   def build(emb0: DataFrame, root: String, k: Int = 8, m: Int = 16,
             dim: Int = 64, kCodes: Int = 16,
             attrs: Option[DataFrame] = None): Unit = {
-    // wipe any previous artifact FIRST (the DedupIndex.build discipline):
-    // centroids/codebooks are written before codes, so a rebuild that
-    // dies mid-way over an existing root would otherwise leave new
-    // models next to stale codes with exists() still true — a silently
-    // wrong index. Deleting root up front makes a partial rebuild read
-    // as exists()==false, per the exists() contract above.
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(
-      emb0.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    // wipe any previous artifact FIRST: centroids/codebooks are written
+    // before codes, so a rebuild that dies mid-way over an existing root
+    // would otherwise leave new models next to stale codes with exists()
+    // still true — a silently wrong index
+    IndexStore.wipe(emb0.sparkSession, root)
     val emb = emb0.select(col("vec_id"), col("v"),
       VectorExprs.norm(col("v")).as("nrm"))
     // coarse quantizer on a deterministic half-sample (q_knn_ivfpq's
@@ -225,22 +197,19 @@ object AnnIndex {
     // attrs BEFORE codes (codes-present ⇒ attrs-present; exists() keys
     // on the codes marker, so a crash here still reads as no-index)
     attrs.foreach(a => writeAttrs(a, assigned, root, 0L))
-    // hive-partition on (coarse cell, ingest batch): probes prune on
+    // hive-partition on (ingest batch, coarse cell): probes prune on
     // cell at the FILE LISTING level; appends overwrite only their own
-    // batch partitions (exactly-once under replay)
-    packCodes(subs, cb)
-      .withColumn("batch", lit(0L))
-      .write.mode("overwrite").partitionBy("cell", "batch")
-      .parquet(codesDir(root))
+    // batch dir (exactly-once under replay)
+    IndexStore.write(packCodes(subs, cb), codesDir(root), "batch", 0L, "cell")
   }
 
   /** Encode and store a NEW batch of vectors against the STORED models —
     * the incremental-maintenance half of the index-at-rest story. No
     * retraining: centroids and codebooks are read back (model-sized),
     * the batch is assigned/encoded with the exact expressions build()
-    * uses, and written under `batch=batchId` partitions with DYNAMIC
-    * partition overwrite — replaying a batch id overwrites only itself,
-    * so ingest is exactly-once however often a batch is re-delivered.
+    * uses, and written as its own `batch=batchId` dir — replaying a batch
+    * id overwrites only itself, so ingest is exactly-once however often
+    * a batch is re-delivered.
     * Per-row cost is O(batch), never O(corpus); the stored corpus is
     * untouched. Batching-invariant by construction: encode is per-row
     * arithmetic against fixed models.
@@ -255,9 +224,7 @@ object AnnIndex {
              m: Int = 16, dim: Int = 64,
              attrs: Option[DataFrame] = None): Unit = {
     val s = emb0.sparkSession
-    require(exists(s, root),
-      s"no ANN index under $root — build the backfill first")
-    require(batchId > 0L, "batch 0 is the backfill partition")
+    IndexStore.requireAppendable(s, root, codesDir(root), batchId)
     require(attrs.isEmpty || hasAttrs(s, root),
       "attrs passed to append but the index was built without the " +
         "sidecar — rebuild with attrs (an index is attribute-carrying " +
@@ -265,24 +232,15 @@ object AnnIndex {
     require(attrs.nonEmpty || !hasAttrs(s, root),
       "the index carries the attrs sidecar but this append has none — " +
         "its vectors would silently vanish from every filtered probe")
-    val hwm = compactedThrough(s, root)
-    require(batchId > hwm,
-      s"batch $batchId was already folded by a compaction (high-water " +
-        s"mark $hwm) — re-appending it would store every vector twice " +
-        s"and double-count its ADC sum at query time")
-    val cents = s.read.parquet(centroidsDir(root))
-    val cb = s.read.parquet(codebooksDir(root))
+    val cents = centroids(s, root)
+    val cb = codebooks(s, root)
     val assigned = assign(emb0, cents).localCheckpoint(true)
     val subs = ProductQuantizer.subvectors(
       assigned.select(col("vec_id"), col("cell"), col("rv").as("v")),
       m, dim, keep = Seq("cell"))
     attrs.foreach(a => writeAttrs(a, assigned, root, batchId))
-    packCodes(subs, cb)
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "batch")
-      .parquet(codesDir(root))
+    IndexStore.write(packCodes(subs, cb), codesDir(root), "batch", batchId,
+      "cell")
   }
 
   /** Fold every ingest `batch=` partition of the codes table into a
@@ -303,52 +261,36 @@ object AnnIndex {
     * file (build's vec_id-hashed shuffle writes up to one file per
     * shuffle partition per cell), sorted on vec_id for row-group stats.
     *
-    * Models (centroids, codebooks) copy over byte-for-byte — compaction
+    * Models (centroids, codebooks) copy over row-for-row — compaction
     * retrains nothing, so stored codes stay decodable. Staged write +
-    * two-rename swap (util.AtomicSwap) with the high-water mark written
-    * LAST as the completeness marker: a crash at any point is healed by
-    * the recover call inside exists(). The HWM makes a post-compaction
+    * two-rename swap (util.IndexStore): a crash at any point is healed
+    * inside exists(), and the high-water mark makes a post-compaction
     * replay of a folded batch a loud error in [[append]] — streaming
     * callers skip those batches idempotently instead
-    * ([[graft.streaming.Streams.annIndexIngest]]). */
+    * ([[graft.streaming.Streams.annIndexIngest]]). Only committed
+    * batches fold. */
   def compact(s: SparkSession, root: String): Unit = {
     require(exists(s, root), s"no ANN index under $root")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(s, root)
-    val stagingPath = graft.util.AtomicSwap.stagingPath(rootPath)
-    val staging = stagingPath.toString
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-    val committed = batchIds(s, root)
-    s.read.parquet(centroidsDir(root))
-      .write.mode("overwrite").parquet(centroidsDir(staging))
-    s.read.parquet(codebooksDir(root))
-      .write.mode("overwrite").parquet(codebooksDir(staging))
-    // attrs fold mirrors the codes fold (same layout argument);
-    // restricting to codes-committed batches drops any orphan attr
-    // partition a crashed append left behind
-    if (hasAttrs(s, root)) {
-      val committedSet = committed.map(java.lang.Long.valueOf)
-      s.read.parquet(attrsDir(root))
-        .filter(col("batch").isin(committedSet: _*))
-        .drop("batch").withColumn("batch", lit(0L))
-        .repartition(col("cell"))
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite").partitionBy("cell", "batch")
-        .parquet(attrsDir(staging))
-      fs.create(attrsMarker(staging), true).close()
+    val folded = committedBatches(s, root)
+    val attrsToo = hasAttrs(s, root)
+    IndexStore.compact(s, root, folded) { staging =>
+      centroids(s, root).write.parquet(centroidsDir(staging))
+      codebooks(s, root).write.parquet(codebooksDir(staging))
+      // attrs fold mirrors the codes fold (same layout argument);
+      // restricting to codes-committed batches drops any orphan attr
+      // batch a crashed append left behind
+      if (attrsToo)
+        IndexStore.write(byCell(attrRows(s, root, folded).drop("batch")),
+          attrsDir(staging), "batch", 0L, "cell")
+      IndexStore.write(byCell(IndexStore.read(s, codesDir(root), CodesSchema,
+          "batch", folded).select("vec_id", "codes", "cell")),
+        codesDir(staging), "batch", 0L, "cell")
     }
-    s.read.parquet(codesDir(root))
-      .select(col("vec_id"), col("codes"), col("cell"))
-      .withColumn("batch", lit(0L))
-      .repartition(col("cell"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").partitionBy("cell", "batch")
-      .parquet(codesDir(staging))
-    val hwm = math.max(committed.max, compactedThrough(s, root))
-    val out = fs.create(hwmPath(staging), true)
-    try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()
-    graft.util.AtomicSwap.promote(fs, rootPath)
   }
+
+  /** One file per cell, vec_id-sorted for row-group stats. */
+  private def byCell(rows: DataFrame): DataFrame =
+    rows.repartition(col("cell")).sortWithinPartitions("cell", "vec_id")
 
   /** Top-`n` approximate neighbors of `qv` (an L2-normalized query
     * vector) answered ONLY from the stored artifacts under `root` —
@@ -365,7 +307,7 @@ object AnnIndex {
         "with attrs = Some(...)")
     require(qv.length % m == 0, s"dim ${qv.length} not divisible by m $m")
     val qvc = typedLit(qv)
-    val cents = s.read.parquet(centroidsDir(root))
+    val cents = centroids(s, root)
     // probe the nprobe max-cosine cells; per-cell query residual for ADC.
     // Local.model: k rows — the artifact-read discipline, not a data pull.
     val probed = graft.util.Local.model(
@@ -383,13 +325,13 @@ object AnnIndex {
     val qsubs = probed.select(col("cell"), posexplode(expr(
         s"transform(sequence(0, ${m - 1}), s -> slice(qrv, s * $w + 1, $w))"))
       .as(Seq("sub", "qv")))
-    val cb = s.read.parquet(codebooksDir(root))
-    val dtab = qsubs.join(broadcast(cb), Seq("sub"))
+    val dtab = qsubs.join(broadcast(codebooks(s, root)), Seq("sub"))
       .select(col("cell"), col("sub"), col("code_id"),
         ProductQuantizer.dist2(col("qv"), col("cv")).as("d"))
     // the probe scan: cell IN (…) literals → static partition pruning —
-    // only the probed cells' files are listed/read from the store
-    val codes0 = s.read.parquet(codesDir(root))
+    // only the probed cells' files of committed batches are read
+    val codes0 = IndexStore.read(s, codesDir(root), CodesSchema, "batch",
+        committedBatches(s, root))
       .filter(col("cell").isin(cellIds: _*))
       .filter(excludeId.map(id => col("vec_id") =!= id).getOrElse(lit(true)))
     // metadata filter BEFORE selection (filtered top-k ≠ filter(top-k)):

@@ -36,10 +36,8 @@ object BigramLm {
 
   /** kgrid is written LAST by [[store]], so its marker implies the
     * whole artifact (grid + dict + kgrid). */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${kgridDir(root)}/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(s: SparkSession, root: String): Boolean =
+    graft.util.IndexStore.isCommitted(s, kgridDir(root))
 
   /** The corpus bigram explode: (doc_id, w1, w2) — one row per adjacent
     * token pair on the whitespace tokenization. */
@@ -87,9 +85,7 @@ object BigramLm {
     * as "no model" and rebuilds, never as a grid without its ids. */
   def store(docs: DataFrame, root: String): Unit = {
     val s = docs.sparkSession
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    graft.util.IndexStore.wipe(s, root)
     train(docs).write.mode("overwrite").parquet(gridDir(root))
     val grid = s.read.parquet(gridDir(root))
     val dict = grid.select(col("w1").as("w"))

@@ -86,10 +86,8 @@ object BpeTrain {
   private def mergesDir(root: String) = s"$root/merges"
 
   /** True iff a trained merge table exists under `root`. */
-  def exists(s: org.apache.spark.sql.SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${mergesDir(root)}/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(s: org.apache.spark.sql.SparkSession, root: String): Boolean =
+    graft.util.IndexStore.isCommitted(s, mergesDir(root))
 
   /** Train and persist the merge table — the tokenizer artifact (the
     * train-once / apply-forever discipline of AnnIndex/cluster_assign). */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.IndexStore
 
 /** Benchmark-contamination index AT REST — the artifact form of
   * q_decontaminate, completing the index family (dedup / ANN / BM25 /
@@ -28,14 +29,14 @@ object DecontamIndex {
 
   private def bloomDir(root: String)    = s"$root/bloom"
   private def shinglesDir(root: String) = s"$root/shingles"
+  private[graft] val ShinglesSchema = "shingle BIGINT, bench_id BIGINT"
+  private[graft] val BloomSchema = "sketch BINARY"
 
   /** True iff a complete index exists under `root` (the Bloom sketch is
-    * written last — FROM the stored rows — so its _SUCCESS implies the
+    * written last — FROM the stored rows — so its marker implies the
     * whole artifact). */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${bloomDir(root)}/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(s: SparkSession, root: String): Boolean =
+    IndexStore.isCommitted(s, bloomDir(root))
 
   /** Persist the bench suite's contamination index. `benchShingles` =
     * (doc_id, shingle) from Graft.shingleRows. The bench suite is
@@ -46,13 +47,11 @@ object DecontamIndex {
   def build(benchShingles: DataFrame, root: String,
             expectedItems: Long = 1000000L): Unit = {
     val s = benchShingles.sparkSession
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    IndexStore.wipe(s, root)
     benchShingles
       .select(col("shingle"), col("doc_id").as("bench_id"))
       .write.mode("overwrite").parquet(shinglesDir(root))
-    s.read.parquet(shinglesDir(root))
+    s.read.schema(ShinglesSchema).parquet(shinglesDir(root))
       .select(BloomJoin.keyBloomAgg(col("shingle"), expectedItems)
         .as("sketch"))
       .write.mode("overwrite").parquet(bloomDir(root))
@@ -66,8 +65,9 @@ object DecontamIndex {
   def query(trainShingles: DataFrame, root: String): DataFrame = {
     val s = trainShingles.sparkSession
     require(exists(s, root), s"no decontamination index under $root")
-    val sketchRow = s.read.parquet(bloomDir(root)).collect()(0)
-    val bench = s.read.parquet(shinglesDir(root))
+    val sketchRow =
+      s.read.schema(BloomSchema).parquet(bloomDir(root)).collect()(0)
+    val bench = s.read.schema(ShinglesSchema).parquet(shinglesDir(root))
     // an EMPTY bench suite aggregates to a null sketch: skip the
     // pre-filter (the exact join against zero stored rows is empty
     // either way — same answer, no null literal in the plan)

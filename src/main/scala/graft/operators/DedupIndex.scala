@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.util.AtomicSwap
+import graft.util.IndexStore
 
 /** MinHash/LSH dedup index AT REST — the artifact-centric half of the
   * near-dup stack, mirroring [[AnnIndex]] for retrieval.
@@ -19,7 +19,9 @@ import graft.util.AtomicSwap
   *   root/docs/ingest=N/ — (doc_id, bands, ss, n_sh): `bands(i)` is band
   *                         i's hash (MinHashLSH.bandHashes), `ss` the
   *                         sorted shingle-hash set, `n_sh` its size
-  *   root/compacted_through — the compaction high-water mark
+  *
+  * in the shared at-rest layout (util.IndexStore: commit marker per
+  * ingest, compaction high-water mark, staged swap).
   *
   * Query shape — one pass over the stored docs: each row's `bands` is
   * posexploded and probes the batch's exploded (band_idx, band_hash)
@@ -44,79 +46,52 @@ import graft.util.AtomicSwap
   * The batch-vs-corpus contract means a pipeline alternates
   * queryBatch → append: accepted batches join the index incrementally,
   * so the corpus is signatured exactly once across its lifetime. Each
-  * append is one write into its own ingest partition (`_SUCCESS` is its
-  * commit marker), which makes re-delivery of a batch (a streaming
+  * append is one write into its own ingest partition (committed by its
+  * marker), which makes re-delivery of a batch (a streaming
   * replay after failure) exactly idempotent — the property
   * [[graft.streaming.Streams.dedupIndexIngest]] builds on — and gives
   * per-batch lineage/retention at rest for free.
   */
 object DedupIndex {
 
-  private val RowSchema =
+  private[graft] val RowSchema =
     "doc_id BIGINT, bands ARRAY<BIGINT>, ss ARRAY<BIGINT>, n_sh BIGINT"
   /** Target size of one compacted file. */
   private val CompactFileBytes = 64L << 20
 
-  private def ingestDir(root: String, id: Long) = s"$root/docs/ingest=$id"
-  private def hwmPath(root: String) = new Path(s"$root/compacted_through")
+  private def docsDir(root: String) = s"$root/docs"
+  private def ingestDir(root: String, id: Long) =
+    IndexStore.part(docsDir(root), "ingest", id)
 
-  private def rawFs(s: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** The index's filesystem, once `root` is known not to hold the
-    * two-table layout (bands/ + profiles/) that earlier versions wrote:
-    * read as this layout it would answer from an empty docs/, and read
-    * as "no index" it would invite a wipe-and-rebuild of the caller's
-    * corpus. [[build]] / [[buildDocs]] replace it. */
-  private def fsOf(s: SparkSession, root: String): FileSystem = {
-    val fs = rawFs(s, root)
+  /** `root`, once it is known not to hold the two-table layout (bands/ +
+    * profiles/) that earlier versions wrote: read as this layout it
+    * would answer from an empty docs/, and read as "no index" it would
+    * invite a wipe-and-rebuild of the caller's corpus. [[build]] /
+    * [[buildDocs]] replace it. */
+  private def checked(s: SparkSession, root: String): String = {
+    val fs = IndexStore.fs(s, root)
     if (Seq("bands", "profiles").exists(d => fs.exists(new Path(root, d))))
       throw new IllegalStateException(s"$root holds the retired two-table " +
         "dedup index layout (bands/ + profiles/), which this version " +
         "does not read — rebuild it with DedupIndex.build or buildDocs")
-    fs
+    root
   }
 
-  /** Highest ingest id folded by a [[compact]] (−1 if never compacted):
-    * appends at or below it are refused — their documents are already
-    * in the compacted partition, and re-appending would duplicate every
-    * row (the InvertedIndex high-water-mark rule). */
-  def compactedThrough(s: SparkSession, root: String): Long = {
-    val fs = fsOf(s, root)
-    if (!fs.exists(hwmPath(root))) -1L
-    else {
-      val in = fs.open(hwmPath(root))
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+  /** Highest ingest id folded by a [[compact]] (−1 if never compacted). */
+  def compactedThrough(s: SparkSession, root: String): Long =
+    IndexStore.compactedThrough(s, checked(s, root))
 
-  /** Committed ingest ids: partitions whose `_SUCCESS` marker exists. A
-    * torn append (no marker) is excluded, so its partial rows never
-    * answer a query and never fold into a compaction. */
+  /** Committed ingest ids: a torn append is excluded, so its partial
+    * rows never answer a query and never fold into a compaction. */
   private[graft] def committedIngests(s: SparkSession, root: String)
-      : Seq[Long] = {
-    val fs = fsOf(s, root)
-    val dir = new Path(s"$root/docs")
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest=") &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("ingest=").toLong).sorted
-  }
+      : Seq[Long] =
+    IndexStore.committed(s, docsDir(checked(s, root)))
 
-  /** True iff an index exists under `root` (its backfill partition is
-    * committed); throws on the retired two-table layout (see [[fsOf]]).
-    * Side effect by design: first repairs any compaction swap a crash
-    * tore mid-rename (util.AtomicSwap.recover — the compacted artifact,
-    * complete but not yet promoted, is moved into place), so a torn
-    * swap heals on first touch instead of reading as "no index" and
-    * baiting callers into a wipe-and-rebuild over the orphaned fold. */
-  def exists(s: SparkSession, root: String): Boolean = {
-    AtomicSwap.recover(rawFs(s, root), new Path(root), "compacted_through")
-    fsOf(s, root).exists(new Path(ingestDir(root, 0L), "_SUCCESS"))
-  }
+  /** True iff an index exists under `root` (its backfill is committed);
+    * throws on the retired two-table layout (see [[checked]]). Heals a
+    * torn compaction swap first (util.IndexStore). */
+  def exists(s: SparkSession, root: String): Boolean =
+    IndexStore.exists(s, checked(s, root), docsDir(root))
 
   /** The stored rows of the given committed ingests. Static schema and
     * explicit partition paths: no footer inference and no listing of
@@ -162,20 +137,15 @@ object DedupIndex {
     * `shingleRows` = (doc_id, shingle:int64) rows (Graft.shingleRows). */
   def build(shingleRows: DataFrame, root: String, k: Int = 16, b: Int = 8,
             r: Int = 2): Unit = {
-    wipe(shingleRows.sparkSession, root)
+    IndexStore.wipe(shingleRows.sparkSession, root)
     writeIngest(rowsOfShingles(shingleRows, k, b, r), root, 0L)
   }
 
   /** [[build]] from raw documents through the profile kernel. */
   def buildDocs(docs: DataFrame, root: String, k: Int = 16, b: Int = 8,
                 r: Int = 2): Unit = {
-    wipe(docs.sparkSession, root)
+    IndexStore.wipe(docs.sparkSession, root)
     writeIngest(rowsOfDocs(docs, k, b, r), root, 0L)
-  }
-
-  private def wipe(s: SparkSession, root: String): Unit = {
-    val fs = rawFs(s, root)
-    if (fs.exists(new Path(root))) fs.delete(new Path(root), true)
   }
 
   /** Incrementally index an accepted batch as ingest partition
@@ -186,28 +156,21 @@ object DedupIndex {
     * exactly idempotent. */
   def append(shingleRows: DataFrame, root: String, ingestId: Long,
              k: Int = 16, b: Int = 8, r: Int = 2): Unit = {
-    requireAppendable(shingleRows.sparkSession, root, ingestId)
+    IndexStore.requireAppendable(shingleRows.sparkSession,
+      checked(shingleRows.sparkSession, root), docsDir(root), ingestId)
     writeIngest(rowsOfShingles(shingleRows, k, b, r), root, ingestId)
   }
 
   /** [[append]] from raw documents through the profile kernel. */
   def appendDocs(docs: DataFrame, root: String, ingestId: Long,
                  k: Int = 16, b: Int = 8, r: Int = 2): Unit = {
-    requireAppendable(docs.sparkSession, root, ingestId)
+    IndexStore.requireAppendable(docs.sparkSession,
+      checked(docs.sparkSession, root), docsDir(root), ingestId)
     writeIngest(rowsOfDocs(docs, k, b, r), root, ingestId)
   }
 
-  private def requireAppendable(s: SparkSession, root: String,
-                                ingestId: Long): Unit = {
-    require(ingestId > 0, s"ingestId must be > 0 (0 is the backfill): $ingestId")
-    val hwm = compactedThrough(s, root)
-    require(ingestId > hwm,
-      s"ingest $ingestId was already folded by a compaction (high-water " +
-        s"mark $hwm) — re-appending it would duplicate every document")
-  }
-
   /** Write stored rows as ingest partition `ingestId`: one write, one
-    * `_SUCCESS` marker. FILE-COUNT discipline (the small-file problem,
+    * commit marker. FILE-COUNT discipline (the small-file problem,
     * measured): every query re-scans the whole stored index and Spark
     * pays a per-FILE open cost — with shuffle-partition-many files per
     * ingest the 40k-doc stream bench degraded to ~16 s/batch by batch
@@ -219,8 +182,8 @@ object DedupIndex {
     * is the caller's to check (see [[append]]). */
   private[graft] def writeIngest(rows: DataFrame, root: String,
                                  ingestId: Long): Unit =
-    (if (ingestId == 0L) rows else rows.coalesce(1))
-      .write.mode("overwrite").parquet(ingestDir(root, ingestId))
+    IndexStore.write(if (ingestId == 0L) rows else rows.coalesce(1),
+      docsDir(root), "ingest", ingestId)
 
   /** Near-duplicate pairs (batch_doc, corpus_doc, jaccard) between an
     * incoming batch and the STORED corpus index, exact Jaccard >=
@@ -301,31 +264,17 @@ object DedupIndex {
     * shuffle: the writer count derives from the committed bytes on disk
     * (a listing, not a Spark job), one writer per 64 MB, at most 64.
     *
-    * Staged write + two-rename swap (util.AtomicSwap — the shared
-    * compaction discipline): the fold lands completely under
-    * `root.compact` with the high-water mark written LAST (marker =
-    * fold finished), then root steps aside and staging is promoted. A
-    * crash at any point is healed by the recover call inside exists():
-    * either the old root rolls back or the completed fold is promoted —
-    * never a missing artifact, never a half-compacted index that
-    * answers wrongly. The high-water mark travels with the artifact:
-    * [[append]] refuses any ingest id a future re-delivery might
+    * Staged write + two-rename swap (util.IndexStore.compact): a crash
+    * at any point is healed inside exists(), and the high-water mark
+    * makes [[append]] refuse any ingest id a future re-delivery might
     * duplicate. */
   def compact(s: SparkSession, root: String): Unit = {
     require(exists(s, root), s"no dedup index under $root")
-    val rootPath = new Path(root)
-    val fs = fsOf(s, root)
-    val staging = AtomicSwap.stagingPath(rootPath)
-    if (fs.exists(staging)) fs.delete(staging, true)
     val ingests = committedIngests(s, root)
-    val bytes = ingests.map(id =>
-      fs.getContentSummary(new Path(ingestDir(root, id))).getLength).sum
+    val bytes = ingests.map(id => IndexStore.fs(s, root)
+      .getContentSummary(new Path(ingestDir(root, id))).getLength).sum
     val writers = math.min(64L, bytes / CompactFileBytes + 1).toInt
-    stored(s, root, ingests).coalesce(writers)
-      .write.parquet(ingestDir(staging.toString, 0L))
-    val hwm = math.max(ingests.max, compactedThrough(s, root))
-    val out = fs.create(hwmPath(staging.toString), true)
-    try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()
-    AtomicSwap.promote(fs, rootPath)
+    IndexStore.compact(s, root, ingests)(staging =>
+      writeIngest(stored(s, root, ingests).coalesce(writers), staging, 0L))
   }
 }

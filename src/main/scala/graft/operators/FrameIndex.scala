@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.IndexStore
 
 /** The frame-hash index AT REST with the full maintenance lifecycle —
   * the fourth stored index to get it (DedupIndex, InvertedIndex,
@@ -21,9 +22,10 @@ import org.apache.spark.sql.functions._
   * Screening reads ALL ingest partitions — a probe never cares which
   * wave admitted a video — so accumulated small ingest files degrade
   * every probe at flat row volume: [[compact]] folds them into ingest-0
-  * with the shared [[graft.util.AtomicSwap]] crash-safe swap and a
-  * high-water mark that refuses re-appends of folded ingests
-  * (streaming callers skip those idempotently).
+  * under the shared at-rest protocol ([[graft.util.IndexStore]]: commit
+  * markers, crash-safe swap, and a high-water mark that refuses
+  * re-appends of folded ingests — streaming callers skip those
+  * idempotently).
   */
 object FrameIndex {
 
@@ -31,61 +33,31 @@ object FrameIndex {
   private def hotDir(root: String) = s"$root/hot"
   private def dfsDir(root: String) = s"$root/dfs"
 
-  private def hwmPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/compacted_through")
+  private[graft] val FramesSchema =
+    "doc_id BIGINT, fhash BIGINT, n_fr BIGINT, ingest BIGINT"
+  private[graft] val DfsSchema = "fhash BIGINT, df BIGINT, ingest BIGINT"
+  private[graft] val HotSchema = "fhash BIGINT"
 
-  private def fsOf(s: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** True iff an index exists under `root`. Side effect by design:
-    * first repairs any compaction swap a crash tore mid-rename
-    * (util.AtomicSwap.recover), so a torn swap heals on first touch
-    * instead of reading as "no index" and baiting callers into a
-    * wipe-and-rebuild over the orphaned fold. */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val fs = fsOf(s, root)
-    graft.util.AtomicSwap.recover(
-      fs, new org.apache.hadoop.fs.Path(root), "compacted_through")
-    fs.exists(new org.apache.hadoop.fs.Path(
-      s"${framesDir(root)}/ingest=0/_SUCCESS"))
-  }
+  /** True iff an index exists under `root`; heals a torn compaction
+    * swap first (util.IndexStore). */
+  def exists(s: SparkSession, root: String): Boolean =
+    IndexStore.exists(s, root, framesDir(root))
 
   /** Highest ingest id folded into ingest 0 by [[compact]] (−1 before
     * any compaction). [[append]] refuses ids at or below it: a
     * re-delivered already-folded ingest would store its frame rows
     * twice and double-count n_inter at screen time. */
-  def compactedThrough(s: SparkSession, root: String): Long = {
-    val fs = fsOf(s, root)
-    if (!fs.exists(hwmPath(root))) -1L
-    else {
-      val in = fs.open(hwmPath(root))
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+  def compactedThrough(s: SparkSession, root: String): Long =
+    IndexStore.compactedThrough(s, root)
 
-  /** Ingest ids whose partition carries its `_SUCCESS` commit marker
-    * (directory listing, not a data scan). The output directory is
-    * created at job SETUP, before commit, so an append that crashed
-    * mid-write leaves an `ingest=` dir without the marker: trusting the
-    * bare listing would raise the compaction high-water mark past that
+  /** Ingest ids whose partition carries its commit marker. A crashed
+    * append leaves an `ingest=` dir without it: trusting the bare
+    * listing would raise the compaction high-water mark past that
     * UNCOMMITTED batch, and the streaming face would then skip its
     * redelivery as "already folded" — the batch's frame rows silently
-    * lost forever. Only marker-bearing ids count (the DedupIndex
-    * committedIngests convention), and [[compact]]/[[stored]] restrict
-    * their reads to this set. */
-  private def committedIngests(s: SparkSession, root: String): Seq[Long] = {
-    val fs = fsOf(s, root)
-    val p = new org.apache.hadoop.fs.Path(framesDir(root))
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("ingest=").toLong).sorted
-  }
+    * lost forever. [[compact]]/[[stored]] read only this set. */
+  private def committedIngests(s: SparkSession, root: String): Seq[Long] =
+    IndexStore.committed(s, framesDir(root))
 
   /** (doc_id, fhash, n_fr) — the doc's distinct frame hashes plus its
     * TOTAL distinct-frame count denormalized onto every row. Storing
@@ -131,23 +103,7 @@ object FrameIndex {
     * complete index whose fold recounts, never a wrong one. */
   private def writeDfs(dfDelta: DataFrame, root: String,
                        ingestId: Long): Unit =
-    dfDelta.repartitionByRange(col("fhash")).sortWithinPartitions("fhash")
-      .write.mode("overwrite").parquet(s"${dfsDir(root)}/ingest=$ingestId")
-
-  /** Ingest ids with a COMMITTED dfs delta (own `_SUCCESS` marker — a
-    * torn delta from a crashed write must read as absent, not as an
-    * undercount baked into the hot set). */
-  private def committedDfs(s: SparkSession, root: String): Seq[Long] = {
-    val fs = fsOf(s, root)
-    val p = new org.apache.hadoop.fs.Path(dfsDir(root))
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("ingest=").toLong).sorted
-  }
+    IndexStore.write(byHash(dfDelta), dfsDir(root), "ingest", ingestId)
 
   /** Corpus-wide (fhash, df) across every committed frame ingest:
     * stored deltas where present, a recount from the frames partition
@@ -155,36 +111,39 @@ object FrameIndex {
     * exact either way, hash-grain work in the common case. */
   private def dfTable(s: SparkSession, root: String): DataFrame = {
     val frames = committedIngests(s, root)
-    val have = committedDfs(s, root).toSet intersect frames.toSet
+    // a torn delta (no marker) reads as absent, not as an undercount
+    // baked into the hot set
+    val have = IndexStore.committed(s, dfsDir(root)).toSet intersect
+      frames.toSet
     val missing = frames.filterNot(have)
     val fromDfs =
       if (have.isEmpty) None
-      else Some(s.read.parquet(
-          have.toSeq.sorted.map(i => s"${dfsDir(root)}/ingest=$i"): _*)
-        .select("fhash", "df"))
+      else Some(IndexStore.read(s, dfsDir(root), DfsSchema, "ingest",
+          have.toSeq.sorted).select("fhash", "df"))
     val fromFrames =
       if (missing.isEmpty) None
-      else Some(s.read.parquet(
-          missing.map(i => s"${framesDir(root)}/ingest=$i"): _*)
-        .groupBy("fhash").agg(count(lit(1)).as("df")))
+      else Some(IndexStore.read(s, framesDir(root), FramesSchema, "ingest",
+          missing).groupBy("fhash").agg(count(lit(1)).as("df")))
     (fromDfs ++ fromFrames).reduceOption(_ unionByName _)
       .map(_.groupBy("fhash").agg(sum("df").as("df")))
       .getOrElse(s.emptyDataFrame
         .select(lit(0L).as("fhash"), lit(0L).as("df")).limit(0))
   }
 
-  /** Build the backfill (ingest 0) from the reference corpus. Rows are
-    * RANGE-partitioned on fhash and sorted within each file, so a
-    * corpus-scale backfill spreads over many files whose row-group
+  /** Rows RANGE-partitioned on fhash and sorted within each file, so a
+    * corpus-scale ingest spreads over many files whose row-group
     * min/max stats cover disjoint hash ranges. */
+  private def byHash(rows: DataFrame): DataFrame =
+    rows.repartitionByRange(col("fhash")).sortWithinPartitions("fhash")
+
+  /** Build the backfill (ingest 0) from the reference corpus, wiping any
+    * previous artifact under `root` first. */
   def build(docs: DataFrame, root: String,
             frameBytes: Int = PHash.NPix, stride: Int = 2,
             dfCap: Long = PHash.DefaultFrameDfCap): Unit = {
+    IndexStore.wipe(docs.sparkSession, root)
     val sig = signatures(docs, frameBytes, stride)
-    sig.withN
-      .repartitionByRange(col("fhash"))
-      .sortWithinPartitions("fhash")
-      .write.mode("overwrite").parquet(s"${framesDir(root)}/ingest=0")
+    IndexStore.write(byHash(sig.withN), framesDir(root), "ingest", 0L)
     writeDfs(sig.dfDelta, root, 0L)
     refreshHot(docs.sparkSession, root, dfCap)
   }
@@ -214,12 +173,11 @@ object FrameIndex {
     * usable, merely uncapped, index). Callers broadcast it into
     * [[PHash.screenFrames]]/[[PHash.screenAdmit]]. */
   def hotHashes(s: SparkSession, root: String): DataFrame = {
-    val fs = fsOf(s, root)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"${hotDir(root)}/_SUCCESS")))
+    if (IndexStore.isCommitted(s, hotDir(root)))
       // static schema: the artifact layout is ours, and schema inference
       // is a footer-reading Spark job the streaming screen would pay
       // EVERY micro-batch
-      s.read.schema("fhash BIGINT").parquet(hotDir(root)).select("fhash")
+      s.read.schema(HotSchema).parquet(hotDir(root))
     else
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(Seq(
@@ -228,8 +186,8 @@ object FrameIndex {
   }
 
   /** Admit a batch of accepted uploads under its own immutable
-    * `ingest=` partition (written directly, with its own _SUCCESS as
-    * the per-ingest commit marker — the DedupIndex convention). A
+    * `ingest=` partition (util.IndexStore.write: one write, committed
+    * by its marker). A
     * replayed ingest id overwrites only its own directory, so replay
     * is exactly-once;
     * ids at or below the compaction high-water mark are refused — the
@@ -237,13 +195,10 @@ object FrameIndex {
     * ([[graft.streaming.Streams.frameIndexIngest]]). */
   def append(docs: DataFrame, root: String, ingestId: Long,
              frameBytes: Int = PHash.NPix, stride: Int = 2): Unit = {
-    val s = docs.sparkSession
-    requireAppendable(s, root, ingestId)
-    signatures(docs, frameBytes, stride).withN
-      .repartitionByRange(col("fhash"))
-      .sortWithinPartitions("fhash")
-      .write.mode("overwrite")
-      .parquet(s"${framesDir(root)}/ingest=$ingestId")
+    IndexStore.requireAppendable(docs.sparkSession, root, framesDir(root),
+      ingestId)
+    IndexStore.write(byHash(signatures(docs, frameBytes, stride).withN),
+      framesDir(root), "ingest", ingestId)
     // NO df delta at append — the InvertedIndex discipline: a second
     // committed write PER MICRO-BATCH is the one cost a streaming
     // ingest pays forever (s_frame_index_ingest measured it well
@@ -265,48 +220,29 @@ object FrameIndex {
     * the same docs (n_fr re-derived from the same distinct set;
     * FrameIndexSpec pins the law). */
   def appendSig(sig: DataFrame, root: String, ingestId: Long): Unit = {
-    val s = sig.sparkSession
-    requireAppendable(s, root, ingestId)
+    IndexStore.requireAppendable(sig.sparkSession, root, framesDir(root),
+      ingestId)
     // n_fr as a window over the single coalesced partition: the
     // aggregate+self-join form paid a shuffle plus a broadcast build
     // per micro-batch for a value the one-partition window computes in
     // the write task itself (same rows — n_fr is the doc's distinct
     // frame count either way; the one-file-per-wave layout already
     // forced coalesce(1))
-    sig.coalesce(1)
+    IndexStore.write(sig.coalesce(1)
       .withColumn("n_fr", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-      .sortWithinPartitions("fhash")
-      .write.mode("overwrite")
-      .parquet(s"${framesDir(root)}/ingest=$ingestId")
-  }
-
-  private def requireAppendable(s: SparkSession, root: String,
-                                ingestId: Long): Unit = {
-    require(exists(s, root), s"no frame index under $root — build first")
-    require(ingestId > 0L, "ingest 0 is the backfill partition")
-    val hwm = compactedThrough(s, root)
-    require(ingestId > hwm,
-      s"ingest $ingestId was already folded by a compaction (high-water " +
-        s"mark $hwm) — re-appending it would store its frame rows twice " +
-        s"and double-count n_inter at screen time")
+      .sortWithinPartitions("fhash"), framesDir(root), "ingest", ingestId)
   }
 
   /** The stored (doc_id, fhash, n_fr) rows across every COMMITTED
     * ingest — what [[PHash.screenFrames]] / [[PHash.screenAdmit]]
-    * screen against. Restricted to `_SUCCESS`-bearing partitions (a
-    * static partition filter — pruned at listing time, no data read):
-    * a crashed append's partial rows would otherwise screen with a
-    * wrong n_inter until the replay overwrote them. */
-  def stored(s: SparkSession, root: String): DataFrame = {
-    val inSet = committedIngests(s, root).map(java.lang.Long.valueOf)
-    // static schema (partition column included): inference reads file
-    // footers in a Spark job — a per-micro-batch cost on the screen path
-    s.read.schema("doc_id BIGINT, fhash BIGINT, n_fr BIGINT, ingest BIGINT")
-      .parquet(framesDir(root))
-      .filter(col("ingest").isin(inSet: _*))
-      .select("doc_id", "fhash", "n_fr")
-  }
+    * screen against. Restricted to committed partitions (a static
+    * partition filter — pruned at listing time, no data read): a
+    * crashed append's partial rows would otherwise screen with a wrong
+    * n_inter until the replay overwrote them. */
+  def stored(s: SparkSession, root: String): DataFrame =
+    IndexStore.read(s, framesDir(root), FramesSchema, "ingest",
+      committedIngests(s, root)).select("doc_id", "fhash", "n_fr")
 
   /** Fold every ingest partition into a single ingest-0 set — the
     * periodic maintenance step of the screen-then-admit loop. Frame
@@ -314,34 +250,21 @@ object FrameIndex {
     * the union is already distinct) ⇒ every screen answers identically
     * before and after (pinned in FrameIndexSpec); only the layout
     * changes, for the better: one range-partitioned fhash-sorted file
-    * set instead of one per admission wave. Staged write + two-rename swap
-    * (util.AtomicSwap) with the high-water mark written LAST; a crash
-    * at any point is healed by the recover call inside [[exists]]. */
+    * set instead of one per admission wave. Staged write + two-rename
+    * swap (util.IndexStore); a crash at any point heals inside
+    * [[exists]]. */
   def compact(s: SparkSession, root: String,
               dfCap: Long = PHash.DefaultFrameDfCap): Unit = {
     require(exists(s, root), s"no frame index under $root")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(s, root)
-    val stagingPath = graft.util.AtomicSwap.stagingPath(rootPath)
-    val staging = stagingPath.toString
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-    val committed = committedIngests(s, root)
-    val inSet = committed.map(java.lang.Long.valueOf)
-    s.read.parquet(framesDir(root))
-      .filter(col("ingest").cast("long").isin(inSet: _*))
-      .select(col("doc_id"), col("fhash"), col("n_fr"))
-      .repartitionByRange(col("fhash"))
-      .sortWithinPartitions("fhash")
-      .write.mode("overwrite").parquet(s"${framesDir(staging)}/ingest=0")
-    // the folded artifact carries ONE folded df delta (sum of the
-    // per-ingest deltas; recount fallback inside dfTable) so future
-    // appends keep folding hash-grain — a compaction UPGRADES a
-    // pre-dfs artifact the same way InvertedIndex.compact does
-    writeDfs(dfTable(s, root), staging, 0L)
-    refreshHot(s, staging, dfCap) // fold cadence = hot-set refresh cadence
-    val hwm = math.max(committed.max, compactedThrough(s, root))
-    val out = fs.create(hwmPath(staging), true) // marker LAST: staging done
-    try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()
-    graft.util.AtomicSwap.promote(fs, rootPath)
+    IndexStore.compact(s, root, committedIngests(s, root)) { staging =>
+      IndexStore.write(byHash(stored(s, root)), framesDir(staging), "ingest",
+        0L)
+      // the folded artifact carries ONE folded df delta (sum of the
+      // per-ingest deltas; recount fallback inside dfTable) so future
+      // appends keep folding hash-grain — a compaction UPGRADES a
+      // pre-dfs artifact the same way InvertedIndex.compact does
+      writeDfs(dfTable(s, root), staging, 0L)
+      refreshHot(s, staging, dfCap) // fold cadence = hot-set refresh cadence
+    }
   }
 }

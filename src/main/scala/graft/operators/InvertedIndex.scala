@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.IndexStore
 
 /** BM25 inverted index AT REST — the lexical-retrieval sibling of
   * [[AnnIndex]], and the second leg of hybrid (lexical + semantic)
@@ -12,9 +13,13 @@ import org.apache.spark.sql.functions._
   * classic search-engine artifact — build-once / append-batches /
   * answer-every-query-from-storage:
   *
-  *   root/stats/    — (n_docs, total_tokens)       PARTITIONED BY (batch)
-  *   root/postings/ — (term, doc_id, tf, dl)       PARTITIONED BY (tb, batch)
-  *   root/dfs/      — (term, df)                   PARTITIONED BY (tb, batch)
+  *   root/stats/    — (n_docs, total_tokens, nb)   PARTITIONED BY (batch)
+  *   root/postings/ — (term, doc_id, dl, tf)       PARTITIONED BY (batch, tb)
+  *   root/dfs/      — (term, df)                   PARTITIONED BY (batch, tb)
+  *
+  * in the shared at-rest layout (util.IndexStore: each `batch=N` dir is
+  * one write committed by its marker, plus the compaction high-water
+  * mark and staged swap).
   *
   * `dfs` is the DICTIONARY side table (vocabulary-sized): per-term
   * document frequency per batch, so the probe's idf comes from a
@@ -40,9 +45,9 @@ import org.apache.spark.sql.functions._
   * (the q_text_index_query oracle).
   *
   * Batch stats rows sum at query time (n_docs, total_tokens are
-  * associative), so appends never rewrite history; `batch=` partitions
-  * plus dynamic partition overwrite give exactly-once replay — the
-  * s_text_index_ingest contract, same as AnnIndex.append.
+  * associative), so appends never rewrite history; one overwrite per
+  * `batch=` dir gives exactly-once replay — the s_text_index_ingest
+  * contract, same as AnnIndex.append.
   */
 object InvertedIndex {
 
@@ -53,63 +58,37 @@ object InvertedIndex {
   private def statsDir(root: String)    = s"$root/stats"
   private def postingsDir(root: String) = s"$root/postings"
   private def dfsDir(root: String)      = s"$root/dfs"
-  private def hwmPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/compacted_through")
 
-  private def fsOf(s: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Committed `batch=` ids under a table dir (postings nest under
-    * `tb=`; a glob over both layouts covers either table). */
-  private def batchIds(s: SparkSession, dir: String): Set[Long] = {
-    val fs = fsOf(s, dir)
-    Seq(s"$dir/batch=*", s"$dir/tb=*/batch=*").flatMap { g =>
-      fs.globStatus(new org.apache.hadoop.fs.Path(g)) match {
-        case null => Nil
-        case st => st.toSeq.map(_.getPath.getName.stripPrefix("batch=").toLong)
-      }
-    }.toSet
-  }
+  private[graft] val StatsSchema =
+    "n_docs BIGINT, total_tokens BIGINT, nb BIGINT, batch BIGINT"
+  private[graft] val PostingsSchema =
+    "term STRING, doc_id BIGINT, dl BIGINT, tf BIGINT, batch BIGINT, tb INT"
+  private[graft] val DfsSchema = "term STRING, df BIGINT, batch BIGINT, tb INT"
 
   /** The batch ids BOTH tables have committed. A crash between append()'s
-    * two writes leaves a torn batch present on one side only — reading
+    * two writes leaves a torn batch committed on one side only — reading
     * the intersection makes that batch invisible (the index answers as
     * if the append never ran) instead of silently skewing df/avgdl with
     * stats rows whose postings are missing. Replaying the batch repairs
     * it in place. */
-  private def committedBatches(s: SparkSession, root: String): Set[Long] =
-    batchIds(s, statsDir(root)) intersect batchIds(s, postingsDir(root))
+  private def committedBatches(s: SparkSession, root: String): Seq[Long] =
+    IndexStore.committed(s, statsDir(root))
+      .intersect(IndexStore.committed(s, postingsDir(root)))
 
   /** Highest batch id folded into batch 0 by [[compact]] (−1 before any
     * compaction). append() refuses ids at or below it: a foreachBatch
     * re-delivery of an ALREADY-FOLDED batch would otherwise re-create
     * its partitions next to the compacted copies and double-count every
-    * posting — better a hard error than silent duplication. (Operate
-    * compaction only past the stream's committed checkpoint and the
-    * error can never fire.) */
-  def compactedThrough(s: SparkSession, root: String): Long = {
-    val fs = fsOf(s, root)
-    if (!fs.exists(hwmPath(root))) -1L
-    else {
-      val in = fs.open(hwmPath(root))
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+    * posting. (Operate compaction only past the stream's committed
+    * checkpoint and the error can never fire.) */
+  def compactedThrough(s: SparkSession, root: String): Long =
+    IndexStore.compactedThrough(s, root)
 
-  /** True iff a complete index exists under `root` (postings are written
-    * last, so their _SUCCESS marker implies the whole artifact). Side
-    * effect by design: first repairs any compaction swap a crash tore
-    * mid-rename (util.AtomicSwap.recover), so a torn swap heals on
-    * first touch instead of reading as "no index" and baiting callers
-    * into a wipe-and-rebuild over the orphaned fold. */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val fs = fsOf(s, root)
-    graft.util.AtomicSwap.recover(
-      fs, new org.apache.hadoop.fs.Path(root), "compacted_through")
-    fs.exists(new org.apache.hadoop.fs.Path(s"${postingsDir(root)}/_SUCCESS"))
-  }
+  /** True iff a complete index exists under `root` (stats are written
+    * last, so their committed backfill implies postings). Heals a torn
+    * compaction swap first (util.IndexStore). */
+  def exists(s: SparkSession, root: String): Boolean =
+    IndexStore.exists(s, root, statsDir(root))
 
   /** Tokens of `text` — split on single spaces, empties dropped. ONE
     * definition shared by the index build and the full-scan twin so
@@ -159,62 +138,33 @@ object InvertedIndex {
     * them, and [[dfTable]] HYBRIDIZES — dictionary for the covered
     * bulk + a recount over only the uncovered ingest TAIL (tail batches
     * are micro-batch-sized by construction; the corpus-dense bulk is
-    * exactly what build/compact covered). */
+    * exactly what build/compact covered). A dictionary batch whose
+    * write tore (no commit marker) counts as uncovered. */
   private def dfsOf(postings: DataFrame): DataFrame =
     postings.groupBy("term", "tb").agg(count(lit(1)).as("df"))
-
-  /** True iff the dictionary table finished its JOB commit — the
-    * explicit marker [[writeDfs]] creates only after its write
-    * returns. Presence of the per-(tb, batch) directories alone is
-    * NOT enough: the writer creates/renames them per partition before
-    * job commit, so a crash mid-write leaves a PARTIAL set that would
-    * pass a directory-presence check — terms in the missing buckets
-    * would get undercounted df or drop out of the idf inner join
-    * entirely, silently corrupting BM25 scores. (It must be OUR
-    * marker: the dynamic-partition-overwrite protocol never emits the
-    * usual `_SUCCESS` — verified on disk, a gate on it would silently
-    * disable the dictionary forever.) Only build/compact write dfs
-    * (each into a fresh dir), so one marker covers the artifact; a
-    * torn write reads as "no dictionary" and both [[dfTable]] and
-    * [[compact]] fall back to recounting from the postings — the
-    * recount the scaladoc promises. */
-  private def dfsCommitted(s: SparkSession, root: String): Boolean =
-    fsOf(s, root).exists(dfsMarker(root))
-
-  private def dfsMarker(root: String) =
-    new org.apache.hadoop.fs.Path(s"${dfsDir(root)}/_GRAFT_COMMIT")
 
   /** Hybrid df table for the probe: Some((term, df)) = dictionary rows
     * over the covered batches + a pruned-postings recount over the
     * uncovered (post-compaction ingest tail) batches; None — full
     * recount — for pre-dictionary artifacts. */
   private def dfTable(s: SparkSession, root: String, terms: Seq[String],
-      buckets: Seq[Long], committed: Seq[java.lang.Long])
-      : Option[DataFrame] = {
-    if (!dfsCommitted(s, root)) None
+      buckets: Seq[Long], committed: Seq[Long]): Option[DataFrame] = {
+    val covered = IndexStore.committed(s, dfsDir(root)).intersect(committed)
+    if (covered.isEmpty) None
     else {
-      val committedSet = committed.map(_.longValue).toSet
-      val covered = batchIds(s, dfsDir(root)) intersect committedSet
-      if (covered.isEmpty) None
-      else {
-        val coveredIds = covered.toSeq.sorted.map(java.lang.Long.valueOf)
-        val dict = s.read.parquet(dfsDir(root))
-          .filter(col("batch").isin(coveredIds: _*))
-          .filter(col("tb").isin(buckets: _*))
-          .filter(col("term").isin(terms: _*))
-          .select("term", "df")
-        val tail = (committedSet -- covered).toSeq.sorted
-          .map(java.lang.Long.valueOf)
-        val withTail =
-          if (tail.isEmpty) dict
-          else dict.unionByName(
-            s.read.parquet(postingsDir(root))
-              .filter(col("batch").isin(tail: _*))
-              .filter(col("tb").isin(buckets: _*))
-              .filter(col("term").isin(terms: _*))
-              .groupBy("term").agg(count(lit(1)).as("df")))
-        Some(withTail.groupBy("term").agg(sum("df").as("df")))
-      }
+      val dict = IndexStore.read(s, dfsDir(root), DfsSchema, "batch", covered)
+        .filter(col("tb").isin(buckets: _*))
+        .filter(col("term").isin(terms: _*))
+        .select("term", "df")
+      val tail = committed.diff(covered)
+      val withTail =
+        if (tail.isEmpty) dict
+        else dict.unionByName(
+          IndexStore.read(s, postingsDir(root), PostingsSchema, "batch", tail)
+            .filter(col("tb").isin(buckets: _*))
+            .filter(col("term").isin(terms: _*))
+            .groupBy("term").agg(count(lit(1)).as("df")))
+      Some(withTail.groupBy("term").agg(sum("df").as("df")))
     }
   }
 
@@ -232,23 +182,24 @@ object InvertedIndex {
     postings.repartition(NumBuckets, col("tb"))
       .sortWithinPartitions("tb", "term", "doc_id")
 
-  /** The dictionary write shared by build/append/compact: df rows laid
-    * out like the postings (one file per (tb, batch), term-sorted). */
-  private def writeDfs(dfs: DataFrame, root: String, batchId: Long): Unit = {
-    dfs.repartition(NumBuckets, col("tb"))
-      .sortWithinPartitions("tb", "term")
-      .withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tb", "batch").parquet(dfsDir(root))
-    // commit marker LAST (see dfsCommitted — dynamic overwrite emits
-    // no _SUCCESS of its own)
-    val s = dfs.sparkSession
-    fsOf(s, root).create(dfsMarker(root), true).close()
+  /** The dictionary write shared by build/compact: df rows laid out
+    * like the postings (one file per (batch, tb), term-sorted). */
+  private def writeDfs(dfs: DataFrame, root: String, batchId: Long): Unit =
+    IndexStore.write(dfs.repartition(NumBuckets, col("tb"))
+      .sortWithinPartitions("tb", "term"), dfsDir(root), "batch", batchId, "tb")
+
+  /** One batch's postings and stats rows, postings FIRST: the batch is
+    * visible once both are committed ([[committedBatches]]), and stats
+    * is a single-row write, so the torn window is a postings write with
+    * no stats row — invisible until replayed. */
+  private def writeBatch(docs: DataFrame, root: String, batchId: Long): Unit = {
+    IndexStore.write(compactLayout(postingsOf(docs)), postingsDir(root),
+      "batch", batchId, "tb")
+    IndexStore.write(statsOf(docs), statsDir(root), "batch", batchId)
   }
 
   /** Build and persist the backfill index (batch 0). Wipes any previous
-    * artifact first — stats land before postings, so a rebuild dying
+    * artifact first — stats land after postings, so a rebuild dying
     * mid-way reads as exists()==false (the AnnIndex.build discipline).
     * Emits the compacted one-file-per-bucket layout directly (see
     * [[compactLayout]]) — a fresh backfill should never need a compaction
@@ -260,50 +211,23 @@ object InvertedIndex {
     * coverage check), never a wrong one. */
   def build(docs: DataFrame, root: String): Unit = {
     val s = docs.sparkSession
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
-    statsOf(docs).withColumn("batch", lit(0L))
-      .write.mode("overwrite").partitionBy("batch").parquet(statsDir(root))
-    compactLayout(postingsOf(docs)).withColumn("batch", lit(0L))
-      .write.mode("overwrite").partitionBy("tb", "batch")
-      .parquet(postingsDir(root))
-    writeDfs(dfsOf(s.read.parquet(postingsDir(root))), root, 0L)
+    IndexStore.wipe(s, root)
+    writeBatch(docs, root, 0L)
+    writeDfs(dfsOf(IndexStore.read(s, postingsDir(root), PostingsSchema,
+      "batch", Seq(0L))), root, 0L)
   }
 
-  /** Append a NEW batch of documents under its own `batch=` partitions
-    * with dynamic partition overwrite — replaying a batch id rewrites
-    * only itself (exactly-once under any re-delivery). Contract: doc_ids
-    * must be new to the index; re-delivery of a whole batch under its
-    * original batchId is the supported replay path. Per-batch cost is
-    * O(batch) — the stored corpus partitions are untouched, and the
-    * batch's stats row sums in at query time instead of rewriting the
-    * global counters. */
+  /** Append a NEW batch of documents under its own `batch=` dirs —
+    * replaying a batch id rewrites only itself (exactly-once under any
+    * re-delivery). Contract: doc_ids must be new to the index;
+    * re-delivery of a whole batch under its original batchId is the
+    * supported replay path. Per-batch cost is O(batch) — the stored
+    * corpus partitions are untouched, and the batch's stats row sums in
+    * at query time instead of rewriting the global counters. */
   def append(docs: DataFrame, root: String, batchId: Long): Unit = {
-    val s = docs.sparkSession
-    require(exists(s, root),
-      s"no inverted index under $root — build the backfill first")
-    require(batchId > 0L, "batch 0 is the backfill partition")
-    val hwm = compactedThrough(s, root)
-    require(batchId > hwm,
-      s"batch $batchId was already folded by a compaction (high-water " +
-        s"mark $hwm) — re-appending it would double-count every posting")
-    // POSTINGS FIRST, stats LAST. committedBatches() gates on directory
-    // presence on BOTH sides, and the postings write is a multi-partition
-    // job whose tb=*/batch=N dirs materialize non-atomically — were stats
-    // written first, a crash mid-postings would leave the batch "committed"
-    // with full n_docs/avgdl but partial postings (silently wrong scores).
-    // Stats is a single-row, single-partition write (near-atomic commit),
-    // so writing it last shrinks the torn window to nothing observable:
-    // partial postings with no stats row stay invisible until replayed.
-    compactLayout(postingsOf(docs)).withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tb", "batch").parquet(postingsDir(root))
-    statsOf(docs).withColumn("batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch").parquet(statsDir(root))
+    IndexStore.requireAppendable(docs.sparkSession, root, statsDir(root),
+      batchId)
+    writeBatch(docs, root, batchId)
   }
 
   /** Compact all ingest batches into a single batch-0 partition set —
@@ -313,61 +237,37 @@ object InvertedIndex {
     * pruning is perfect. Compaction preserves the postings ROWS exactly
     * and sums the stats rows, so every query answers identically before
     * and after (pinned in RetrievalSpec) — only the physical layout
-    * changes. Staged write + two-rename swap (util.AtomicSwap): the fold
-    * lands completely under root.compact with the high-water mark
-    * written LAST, then root steps aside and staging is promoted; a
-    * crash at any point is healed by the recover call inside exists() —
-    * never a missing artifact, never a half-compacted index that
-    * answers wrongly (an object-store deployment would swap a manifest
-    * instead of renaming). */
+    * changes. Staged write + two-rename swap (util.IndexStore): a crash
+    * at any point is healed inside exists() — never a missing artifact,
+    * never a half-compacted index that answers wrongly. */
   def compact(s: SparkSession, root: String): Unit = {
     require(exists(s, root), s"no inverted index under $root")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(s, root)
-    val stagingPath = graft.util.AtomicSwap.stagingPath(rootPath)
-    val staging = stagingPath.toString
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
     // fold only batches COMMITTED on both sides — a torn append's
     // orphan partition would otherwise be baked into batch 0
-    val committed = committedBatches(s, root).toSeq.sorted
-    val batchSet = committed.map(java.lang.Long.valueOf)
-    s.read.parquet(statsDir(root))
-      .filter(col("batch").isin(batchSet: _*))
-      .agg(sum("n_docs").as("n_docs"),
-        sum("total_tokens").as("total_tokens"))
-      .withColumn("nb", lit(NumBuckets.toLong))
-      .withColumn("batch", lit(0L))
-      .write.mode("overwrite").partitionBy("batch")
-      .parquet(statsDir(staging))
-    compactLayout(s.read.parquet(postingsDir(root))
-        .filter(col("batch").isin(batchSet: _*))
-        .select("term", "doc_id", "tf", "dl", "tb"))
-      .withColumn("batch", lit(0L))
-      .write.mode("overwrite").partitionBy("tb", "batch")
-      .parquet(postingsDir(staging))
-    // dictionary fold: sum per-batch dfs when the artifact carries them
-    // for every folded batch, else recount from the folded postings —
-    // either way the compacted artifact is dictionary-carrying (a
-    // compaction UPGRADES a pre-dfs index)
-    val foldedDfs = {
-      val fromDict =
-        if (!dfsCommitted(s, root)) None
-        else if (!committed.toSet.subsetOf(batchIds(s, dfsDir(root)))) None
-        else Some(s.read.parquet(dfsDir(root))
-          .filter(col("batch").isin(batchSet: _*))
-          .groupBy("term", "tb").agg(sum("df").as("df")))
-      fromDict.getOrElse(
-        dfsOf(s.read.parquet(postingsDir(root))
-          .filter(col("batch").isin(batchSet: _*))))
+    val folded = committedBatches(s, root)
+    val postings =
+      IndexStore.read(s, postingsDir(root), PostingsSchema, "batch", folded)
+    IndexStore.compact(s, root, folded) { staging =>
+      IndexStore.write(
+        IndexStore.read(s, statsDir(root), StatsSchema, "batch", folded)
+          .agg(sum("n_docs").as("n_docs"),
+            sum("total_tokens").as("total_tokens"))
+          .withColumn("nb", lit(NumBuckets.toLong)),
+        statsDir(staging), "batch", 0L)
+      IndexStore.write(
+        compactLayout(postings.select("term", "doc_id", "dl", "tf", "tb")),
+        postingsDir(staging), "batch", 0L, "tb")
+      // dictionary fold: sum per-batch dfs when the artifact carries them
+      // for every folded batch, else recount from the folded postings —
+      // either way the compacted artifact is dictionary-carrying (a
+      // compaction UPGRADES a pre-dfs index)
+      val dfs =
+        if (folded.diff(IndexStore.committed(s, dfsDir(root))).isEmpty)
+          IndexStore.read(s, dfsDir(root), DfsSchema, "batch", folded)
+            .groupBy("term", "tb").agg(sum("df").as("df"))
+        else dfsOf(postings)
+      writeDfs(dfs, staging, 0L)
     }
-    writeDfs(foldedDfs, staging, 0L)
-    // high-water mark travels with the artifact: append() refuses any
-    // batch id a future re-delivery might duplicate
-    val hwm = math.max(committed.max, compactedThrough(s, root))
-    val out = fs.create(new org.apache.hadoop.fs.Path(
-      s"$staging/compacted_through"), true)
-    try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()
-    graft.util.AtomicSwap.promote(fs, rootPath)
   }
 
   /** Quantized-BM25 contribution of one (doc, term) posting as an exact
@@ -431,46 +331,32 @@ object InvertedIndex {
       : (DataFrame, DataFrame) = {
     require(exists(s, root), s"no inverted index under $root")
     import s.implicits._
-    val committed = committedBatches(s, root).toSeq.sorted
-      .map(java.lang.Long.valueOf)
+    val committed = committedBatches(s, root)
     val qterms = terms.toDF("term")
       .withColumn("tb", pmod(xxhash64(col("term")), lit(NumBuckets.toLong)))
     val buckets = graft.util.Local.model(qterms.select("tb"))
       .collect().map(_.getLong(0)).distinct.toSeq
-    val statsRaw = s.read.parquet(statsDir(root))
-      .filter(col("batch").isin(committed: _*))
-    // artifacts written before the nb column existed skip the check; an
-    // AGGREGATE (max over non-null rows) rather than limit(1) — a
-    // mixed-schema index (pre-nb backfill + nb-carrying appends) would
-    // make limit(1)'s answer depend on which batch's row it sampled
-    // (null → NPE or a silently skipped check)
     // ONE driver job folds the nb check and the corpus constants: the
     // stats table is batches-sized, and running nb-check + st-broadcast
     // as separate jobs charged two fixed scheduling rounds to every
     // probe. n_docs/total_tokens are exact INT64 sums, so shipping them
     // as literals is bit-identical to the former broadcast crossJoin
     // (avgdl: cast-to-double then divide, same IEEE op either way).
-    val hasNb = statsRaw.columns.contains("nb")
     val stRow = graft.util.Local.model(
-      if (hasNb)
-        statsRaw.agg(sum("n_docs").as("n_docs"),
+      IndexStore.read(s, statsDir(root), StatsSchema, "batch", committed)
+        .agg(sum("n_docs").as("n_docs"),
           sum("total_tokens").as("total_tokens"), max("nb").as("nb"))
-      else
-        statsRaw.agg(sum("n_docs").as("n_docs"),
-          sum("total_tokens").as("total_tokens"))
     ).collect().head
-    val storedNb =
-      if (hasNb && !stRow.isNullAt(2)) Some(stRow.getLong(2)) else None
-    require(storedNb.forall(_ == NumBuckets.toLong),
-      s"index at $root was bucketed with nb=${storedNb.get}, this build " +
+    require(stRow.isNullAt(2) || stRow.getLong(2) == NumBuckets.toLong,
+      s"index at $root was bucketed with nb=${stRow.get(2)}, this build " +
         s"probes with $NumBuckets — rebuild or match the constant")
     val nDocs = if (stRow.isNullAt(0)) 0L else stRow.getLong(0)
     val totTok = if (stRow.isNullAt(1)) 0L else stRow.getLong(1)
     val avgdl = if (nDocs == 0L) 0.0 else totTok.toDouble / nDocs
-    val pruned = s.read.parquet(postingsDir(root))
-      .filter(col("batch").isin(committed: _*))
-      .filter(col("tb").isin(buckets: _*))
-      .filter(col("term").isin(terms: _*))
+    val pruned =
+      IndexStore.read(s, postingsDir(root), PostingsSchema, "batch", committed)
+        .filter(col("tb").isin(buckets: _*))
+        .filter(col("term").isin(terms: _*))
     val idfTab = dfTable(s, root, terms, buckets, committed)
       .getOrElse(pruned.groupBy("term").agg(count(lit(1)).as("df")))
       .select(col("term"),

@@ -30,10 +30,8 @@ object NbClassifier {
   private def gridDir(root: String)   = s"$root/grid"
   private def priorsDir(root: String) = s"$root/priors"
 
-  def exists(s: SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"${gridDir(root)}/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  def exists(s: SparkSession, root: String): Boolean =
+    graft.util.IndexStore.isCommitted(s, gridDir(root))
 
   private def toks(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"),
@@ -71,13 +69,10 @@ object NbClassifier {
     (grid, priors)
   }
 
-  /** Train and persist — grid written last, so its _SUCCESS implies the
+  /** Train and persist — grid written last, so its marker implies the
     * whole artifact (the AnnIndex build discipline). */
   def store(docs: DataFrame, root: String): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
+    graft.util.IndexStore.wipe(docs.sparkSession, root)
     val (grid, priors) = train(docs, classesOf(docs))
     priors.write.mode("overwrite").parquet(priorsDir(root))
     grid.write.mode("overwrite").parquet(gridDir(root))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.IndexStore
 
 /** Perceptual-hash (dHash) dedup index AT REST — the fifth stored index
   * (DedupIndex, InvertedIndex, AnnIndex, FrameIndex are the siblings),
@@ -35,53 +36,18 @@ import org.apache.spark.sql.functions._
 object PHashIndex {
 
   private def sigsDir(root: String) = s"$root/sigs"
-  private def hwmPath(root: String) =
-    new org.apache.hadoop.fs.Path(s"$root/compacted_through")
-
-  private def fsOf(s: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  private[graft] val SigsSchema =
+    "doc_id BIGINT, phash BIGINT, band_idx INT, band_val BIGINT, ingest BIGINT"
 
   /** Highest ingest id folded by a [[compact]] (−1 if never compacted):
-    * appends at or below it are refused (the shared high-water-mark
-    * rule — a re-delivered folded batch would store every signature
-    * row twice and double-report its pairs). */
-  def compactedThrough(s: SparkSession, root: String): Long = {
-    val fs = fsOf(s, root)
-    if (!fs.exists(hwmPath(root))) -1L
-    else {
-      val in = fs.open(hwmPath(root))
-      try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-      finally in.close()
-    }
-  }
+    * appends at or below it are refused (util.IndexStore). */
+  def compactedThrough(s: SparkSession, root: String): Long =
+    IndexStore.compactedThrough(s, root)
 
-  /** Ingest ids whose partition carries its `_SUCCESS` commit marker —
-    * a crashed append's partial directory is invisible to screens and
-    * to compaction until its replay overwrites it (the FrameIndex
-    * convention). */
-  private def committedIngests(s: SparkSession, root: String): Seq[Long] = {
-    val fs = fsOf(s, root)
-    val p = new org.apache.hadoop.fs.Path(sigsDir(root))
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("ingest=").toLong).sorted
-  }
-
-  /** True iff an index exists under `root`. Side effect by design:
-    * first heals any compaction swap a crash tore mid-rename
-    * (util.AtomicSwap.recover). */
-  def exists(s: SparkSession, root: String): Boolean = {
-    val fs = fsOf(s, root)
-    graft.util.AtomicSwap.recover(
-      fs, new org.apache.hadoop.fs.Path(root), "compacted_through")
-    fs.exists(new org.apache.hadoop.fs.Path(
-      s"${sigsDir(root)}/ingest=0/_SUCCESS"))
-  }
+  /** True iff an index exists under `root`; heals a torn compaction
+    * swap first (util.IndexStore). */
+  def exists(s: SparkSession, root: String): Boolean =
+    IndexStore.exists(s, root, sigsDir(root))
 
   /** The banded signature rows of a document frame: (doc_id, phash,
     * band_idx, band_val) — one map-side hash pass + a `b`-way explode,
@@ -98,10 +64,7 @@ object PHashIndex {
     * DedupIndex.build discipline: a rebuild that dies mid-way must
     * read as exists()==false, never as new-models-over-stale-rows). */
   def build(docs: DataFrame, root: String, b: Int = 4): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    IndexStore.wipe(docs.sparkSession, root)
     writePrepared(sigRows(docs, b), root, 0L)
   }
 
@@ -111,8 +74,8 @@ object PHashIndex {
     * exactly-once). */
   def append(docs: DataFrame, root: String, ingestId: Long,
              b: Int = 4): Unit = {
-    require(ingestId > 0,
-      s"ingestId must be > 0 (0 is the backfill): $ingestId")
+    IndexStore.requireAppendable(docs.sparkSession, root, sigsDir(root),
+      ingestId)
     writePrepared(sigRows(docs, b), root, ingestId)
   }
 
@@ -121,34 +84,24 @@ object PHashIndex {
     * the backfill keeps the band_idx repartition for parallel scan
     * bandwidth; increments (batch-sized by the query→append contract)
     * write ONE file, globally sorted on the probe key so row-group
-    * pruning still applies. */
+    * pruning still applies. The append guard is the caller's (see
+    * [[append]]). */
   private[graft] def writePrepared(rows: DataFrame, root: String,
                                    ingestId: Long): Unit = {
-    if (ingestId > 0L) {
-      val hwm = compactedThrough(rows.sparkSession, root)
-      require(ingestId > hwm,
-        s"ingest $ingestId was already folded by a compaction (high-water " +
-          s"mark $hwm) — re-appending it would duplicate every signature")
-    }
     val laidOut =
       if (ingestId == 0L) rows.repartition(col("band_idx"))
       else rows.coalesce(1)
-    laidOut.sortWithinPartitions("band_idx", "band_val")
-      .write.mode("overwrite").parquet(s"${sigsDir(root)}/ingest=$ingestId")
+    IndexStore.write(laidOut.sortWithinPartitions("band_idx", "band_val"),
+      sigsDir(root), "ingest", ingestId)
   }
 
   /** The stored banded rows across every COMMITTED ingest. Static
     * schema: inference is a footer-reading job the streaming screen
     * would pay every micro-batch. */
-  def stored(s: SparkSession, root: String): DataFrame = {
-    val inSet = committedIngests(s, root).map(java.lang.Long.valueOf)
-    s.read
-      .schema("doc_id BIGINT, phash BIGINT, band_idx INT, " +
-        "band_val BIGINT, ingest BIGINT")
-      .parquet(sigsDir(root))
-      .filter(col("ingest").isin(inSet: _*))
+  def stored(s: SparkSession, root: String): DataFrame =
+    IndexStore.read(s, sigsDir(root), SigsSchema, "ingest",
+        IndexStore.committed(s, sigsDir(root)))
       .select("doc_id", "phash", "band_idx", "band_val")
-  }
 
   /** Near-duplicate pairs (batch_doc, corpus_doc, hamming ≤ maxHamming)
     * between an incoming batch and the STORED index. The corpus images
@@ -193,20 +146,11 @@ object PHashIndex {
     * partition — the maintenance step bounding the per-probe file
     * count. Rows are preserved exactly, so every query answers
     * identically before and after; staged write + two-rename swap
-    * (util.AtomicSwap) with the high-water mark written LAST, healed
-    * on first touch by [[exists]] after any crash. */
+    * (util.IndexStore), healed on first touch by [[exists]] after any
+    * crash. */
   def compact(s: SparkSession, root: String): Unit = {
     require(exists(s, root), s"no phash index under $root")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(s, root)
-    val stagingPath = graft.util.AtomicSwap.stagingPath(rootPath)
-    val staging = stagingPath.toString
-    if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-    val committed = committedIngests(s, root)
-    writePrepared(stored(s, root), staging, 0L)
-    val hwm = math.max(committed.max, compactedThrough(s, root))
-    val out = fs.create(hwmPath(staging), true)
-    try out.write(hwm.toString.getBytes("UTF-8")) finally out.close()
-    graft.util.AtomicSwap.promote(fs, rootPath)
+    IndexStore.compact(s, root, IndexStore.committed(s, sigsDir(root)))(
+      staging => writePrepared(stored(s, root), staging, 0L))
   }
 }

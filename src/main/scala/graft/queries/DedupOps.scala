@@ -1084,7 +1084,7 @@ object DedupOps {
     // artifact. Rows are preserved exactly (each ingest holds distinct
     // docs) so the screen answers identically — the oracle equality IS
     // the assertion; the high-water mark refuses re-appends of folded
-    // ingests and the swap is the crash-safe util.AtomicSwap protocol.
+    // ingests and the swap is the crash-safe util.IndexStore protocol.
     "q_frame_index_compact" -> ((s, d) => {
       import graft.operators.{FrameIndex, PHash}
       val root = Scans.scratch("frameindexcpt", s, d)
@@ -1141,7 +1141,7 @@ object DedupOps {
     // into one band_idx-partitioned probe-key-sorted ingest-0 set; the
     // screen answers identically (oracle equality IS the assertion),
     // the high-water mark refuses folded replays, and the swap is the
-    // crash-safe util.AtomicSwap protocol
+    // crash-safe util.IndexStore protocol
     "q_phash_index_compact" -> ((s, d) => {
       import graft.operators.PHashIndex
       val root = Scans.scratch("phashindexcpt", s, d)
@@ -1198,10 +1198,8 @@ object DedupOps {
       .select("gram")
 
   private[graft] def blocklistExists(s: org.apache.spark.sql.SparkSession,
-                                     root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+                                     root: String): Boolean =
+    graft.util.IndexStore.isCommitted(s, root)
 
   /** Per-doc boilerplate coverage given a gram frame and a blocklist:
     * (doc_id, n_tok, n_boiler_tok, boiler_permille), every doc present

@@ -98,10 +98,8 @@ object LlmOps {
   }
 
   private[graft] def outlierModelExists(s: org.apache.spark.sql.SparkSession,
-                                        root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/thr/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+                                        root: String): Boolean =
+    graft.util.IndexStore.isCommitted(s, s"$root/thr")
 
   /** Score a batch of (vec_id, label, embedding) rows against the STORED
     * model: two broadcast joins + a pure-map fold — O(batch), never
@@ -242,9 +240,7 @@ object LlmOps {
     // a float-model surface.
     "q_cluster_assign" -> ((s, d) => {
       val root = Scans.scratch("kmeans8", s, d)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_SUCCESS")))
+      if (!graft.util.IndexStore.isCommitted(s, root))
         graft.operators.IvfKMeans
           .centroids(embDouble(Tables.embeddings(s, d)), k = 8, iters = 5)
           .write.mode("overwrite").parquet(root)

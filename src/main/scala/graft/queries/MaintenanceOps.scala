@@ -121,9 +121,7 @@ object MaintenanceOps {
                sum(col("l_quantity").cast(DecimalType(28, 4))).as("p_qty"),
                sum(price * discF).as("p_rev"))
       }
-      val marker = new org.apache.hadoop.fs.Path(s"$root/_SUCCESS")
-      if (!marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .exists(marker))
+      if (!graft.util.IndexStore.isCommitted(s, root))
         partials(li.filter(col("l_shipdate") < cutoff))
           .write.mode("overwrite").parquet(root)
       val delta = partials(li.filter(col("l_shipdate") >= cutoff))

@@ -47,10 +47,8 @@ object PipelineOps {
   }
 
   private[graft] def decontamNearIndexExists(
-      s: org.apache.spark.sql.SparkSession, root: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/profiles/_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+      s: org.apache.spark.sql.SparkSession, root: String): Boolean =
+    graft.util.IndexStore.isCommitted(s, s"$root/profiles")
 
   /** Score a batch of (doc_id, text) docs against the STORED bench
     * index: batch bands ⋈ stored bands for candidates, exact-Jaccard

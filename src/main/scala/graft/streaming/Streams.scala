@@ -494,8 +494,8 @@ object Streams {
     * batchId. Replaying a batch after a restart re-reads the same
     * pre-state and overwrites its OWN version with identical content, so
     * the sink is idempotent — the standard batchId-keyed foreachBatch
-    * exactly-once pattern. Readers take the highest committed version
-    * (marked by `_SUCCESS`), so a concurrent reader never observes a
+    * exactly-once pattern. Readers take the highest committed version,
+    * so a concurrent reader never observes a
     * half-written merge. The merge itself is a window top-1 per key:
     * shuffle-partitioned by user_id, no driver state, cost bound by
     * table size per batch. The version listing uses the local
@@ -617,9 +617,9 @@ object Streams {
     * streaming face of [[graft.operators.AnnIndex.append]]: each
     * micro-batch of (vec_id, v: array<double>, L2-normalized) is
     * encoded against the STORED centroids/codebooks (no retraining)
-    * and committed under its own immutable `batch=` partition set.
-    * foreachBatch's stable batchId + dynamic partition overwrite make
-    * replay exactly-once: a re-delivered batch rewrites only itself.
+    * and committed as its own immutable `batch=` dir. foreachBatch's
+    * stable batchId makes replay exactly-once: a re-delivered batch
+    * rewrites only itself.
     * Ingest ids start at 1: 0 is the backfill's partition. A replay of
     * a batch an [[graft.operators.AnnIndex.compact]] has since folded
     * is skipped idempotently (its vectors are already in the folded
@@ -635,10 +635,9 @@ object Streams {
   /** s_text_index_ingest — continuous BM25 inverted-index maintenance,
     * the streaming face of [[graft.operators.InvertedIndex.append]]:
     * each micro-batch of documents is tokenized into postings (term,
-    * doc_id, tf, dl) plus one batch-stats row, both committed under the
-    * batch's own immutable `batch=` partitions. foreachBatch's stable
-    * batchId + dynamic partition overwrite make replay exactly-once: a
-    * re-delivered batch rewrites only itself, and because query-time df
+    * doc_id, tf, dl) plus one batch-stats row, both committed as the
+    * batch's own immutable `batch=` dirs. foreachBatch's stable batchId
+    * makes replay exactly-once: a re-delivered batch rewrites only itself, and because query-time df
     * and corpus stats are SUMS over batch partitions, a query after any
     * prefix of batches equals the full rebuild over those documents
     * (batching-invariance asserted in StreamingSpec). Ingest ids start
@@ -650,8 +649,8 @@ object Streams {
     * of q_text_bpe_apply: each micro-batch of (doc_id, text) encodes
     * against the STORED merge table (no retraining — the merges bake
     * into the projection as literals, a pure per-row map: O(batch) per
-    * batch, never O(corpus)) and commits under its own
-    * `_SUCCESS`-marked version dir. foreachBatch's stable batchId makes
+    * batch, never O(corpus)) and commits as its own
+    * version dir. foreachBatch's stable batchId makes
     * replay exactly-once. Invariants (spec-pinned): the union of
     * streamed encodings equals the batch twin's output under ANY
     * micro-batch slicing (fixed merges + per-row map ⇒
@@ -665,21 +664,12 @@ object Streams {
       .write.mode("overwrite").parquet(versionDir(outDir, batchId))
   }
 
-  /** Union of all encodings committed by [[bpeEncodeBatch]] — readers
-    * see whole batches only. */
-  def committedEncodings(spark: org.apache.spark.sql.SparkSession,
-                         outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed encoding versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
   /** s_classify_nb — continuous document classification, the streaming
     * face of q_text_classify_at_rest: each micro-batch of (doc_id, lang,
     * text) is scored against the STORED NB model (no retraining — the
     * vocab-sized llk grid broadcasts, scoring is a per-batch
     * broadcast-join + integer sums, O(batch) per batch, never O(corpus))
-    * and committed under its own `_SUCCESS`-marked version dir.
+    * and committed as its own version dir.
     * foreachBatch's stable batchId makes replay exactly-once. Invariants
     * (spec-pinned): the union of streamed predictions equals the batch
     * twin's output under ANY micro-batch slicing (fixed model +
@@ -697,7 +687,7 @@ object Streams {
     * stops): each arriving micro-batch of (doc_id, text) is scored with
     * the EXACT batch machinery (DedupOps.boilerplateCoverage — gram
     * explode, blocklist equi-join, window-union coverage), O(batch) per
-    * batch, never O(corpus), committed under `_SUCCESS`-marked version
+    * batch, never O(corpus), committed as version
     * dirs. Per-doc scores depend only on the doc and the frozen
     * blocklist ⇒ the union is batching-invariant, replay exactly-once
     * via foreachBatch batchId (both pinned in StreamingSpec). */
@@ -714,8 +704,8 @@ object Streams {
     * thresholds, LlmOps.storeOutlierModel — models retrain rarely,
     * vectors arrive constantly): each micro-batch of (vec_id, label,
     * embedding) scores via two broadcast joins + a pure-map zip_with
-    * fold — O(batch) per batch, never O(corpus) — committed under
-    * `_SUCCESS`-marked version dirs. Frozen model ⇒ per-vector scores
+    * fold — O(batch) per batch, never O(corpus) — committed as
+    * version dirs. Frozen model ⇒ per-vector scores
     * are batching-invariant; replay exactly-once via foreachBatch
     * batchId (both pinned in StreamingSpec). */
   def outlierBatch(batch: DataFrame, modelRoot: String, outDir: String,
@@ -730,8 +720,8 @@ object Streams {
     * arrive forever): each micro-batch of (doc_id, text) shingles
     * itself, finds candidates via its bands against the broadcast
     * stored band table, exact-Jaccard-verifies against the broadcast
-    * stored profiles, and commits its per-doc best matches under a
-    * `_SUCCESS`-marked version dir. A doc's hits depend only on the doc
+    * stored profiles, and commits its per-doc best matches as a
+    * version dir. A doc's hits depend only on the doc
     * and the frozen index, so the union is batching-invariant and ≡ the
     * declared q_decontam_near on the same docs (pinned); replay
     * exactly-once via foreachBatch batchId. */
@@ -748,7 +738,7 @@ object Streams {
     * hashes ONLY itself, broadcasts its frame signatures onto the
     * streamed stored rows, and commits every "this upload is a clip of
     * a stored video" hit (directed containment ≥ 0.8 at frame grain)
-    * under a `_SUCCESS`-marked version dir. A doc's hits depend only
+    * as a version dir. A doc's hits depend only
     * on the doc and the frozen index, so the union is
     * batching-invariant and ≡ the one-shot [[graft.operators.PHash
     * .screenFrames]] on the same docs (pinned); replay exactly-once
@@ -759,10 +749,8 @@ object Streams {
     // the hot-hash guard rides beside the frozen index (written by
     // storeFrameIndex); an index stored before the guard existed
     // screens uncapped, unchanged
-    val hotPath = new org.apache.hadoop.fs.Path(s"$indexRoot.hot/_SUCCESS")
     val hot =
-      if (hotPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-            .exists(hotPath))
+      if (graft.util.IndexStore.isCommitted(s, s"$indexRoot.hot"))
         Some(s.read.parquet(s"$indexRoot.hot"))
       else None
     graft.operators.PHash
@@ -821,63 +809,12 @@ object Streams {
       FrameIndex.appendSig(sig, root, ingestId)
   }
 
-  /** Union of all directed containment pairs committed by
-    * [[frameIndexIngest]]. */
-  def committedFramePairs(spark: org.apache.spark.sql.SparkSession,
-                          outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed frame-pair versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Union of all frame-containment hits committed by
-    * [[frameDedupBatch]]. */
-  def committedFrameHits(spark: org.apache.spark.sql.SparkSession,
-                         outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed frame-hit versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Union of all contamination hits committed by [[decontamBatch]]. */
-  def committedContaminations(spark: org.apache.spark.sql.SparkSession,
-                              outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed contamination versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Union of all outlier scores committed by [[outlierBatch]]. */
-  def committedOutliers(spark: org.apache.spark.sql.SparkSession,
-                        outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed outlier versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Union of all boilerplate scores committed by [[boilerplateBatch]]. */
-  def committedBoilerplate(spark: org.apache.spark.sql.SparkSession,
-                           outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed boilerplate versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Union of all predictions committed by [[classifyBatch]] — readers
-    * see whole batches only. */
-  def committedPredictions(spark: org.apache.spark.sql.SparkSession,
-                           outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed prediction versions under $outDir")
-    spark.read.parquet(dirs: _*)
-  }
-
   /** s_cluster_assign — continuous topic-bucketing, the streaming face
     * of q_cluster_assign: each micro-batch of (vec_id, v: array<double>)
     * is assigned to its max-cosine centroid from the STORED k-row model
     * (no retraining — assignment is a per-row map against a broadcast
     * model-sized table, so per-batch cost is O(batch), never O(corpus))
-    * and committed under its own `_SUCCESS`-marked version dir.
+    * and committed as its own version dir.
     * foreachBatch's stable batchId makes replay exactly-once: a
     * re-delivered batch overwrites only its own version. Invariants
     * (spec-pinned): the union of streamed assignments equals the batch
@@ -893,45 +830,25 @@ object Streams {
       .write.mode("overwrite").parquet(versionDir(outDir, batchId))
   }
 
-  /** Union of all assignments committed by [[clusterAssign]] — readers
-    * see whole batches only (version dirs marked `_SUCCESS`). */
-  def committedAssignments(spark: org.apache.spark.sql.SparkSession,
-                           outDir: String): DataFrame = {
-    val dirs = committedVersions(spark, outDir)
-    require(dirs.nonEmpty, s"no committed assignment versions under $outDir")
-    spark.read.parquet(dirs: _*)
+  /** Union of every committed version under `dir` — the output of any
+    * batchId-versioned sink here ([[dedupIndexIngest]],
+    * [[frameIndexIngest]], [[classifyBatch]], …). Readers see whole
+    * batches only: a version dir counts once its write committed
+    * (util.IndexStore.committed). */
+  def committed(spark: org.apache.spark.sql.SparkSession,
+                dir: String): DataFrame = {
+    val vs = graft.util.IndexStore.committed(spark, dir)
+    require(vs.nonEmpty, s"no committed versions under $dir")
+    spark.read.parquet(vs.map(versionDir(dir, _)): _*)
   }
 
-  /** Committed (`_SUCCESS`-marked) `v=` version dirs under `dir`, name
-    * order. Listed through the Hadoop FileSystem of the path — the
-    * pairs/tables are WRITTEN via Spark's Hadoop-FS writers to any FS
-    * URI, so the read path must resolve the same way (a java.io.File
-    * listing would find nothing on a non-local store — the
-    * AnnIndex/DedupIndex.exists discipline). */
-  private def committedVersions(spark: org.apache.spark.sql.SparkSession,
-                                dir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .sortBy(_.getPath.getName)
-      .map(_.getPath.toString)
-  }
-
-  /** Union of all near-dup pairs committed by [[dedupIndexIngest]] —
-    * readers see whole batches only (version dirs marked _SUCCESS). */
+  /** [[committed]] for the near-dup pairs of [[dedupIndexIngest]]. */
   def committedPairs(spark: org.apache.spark.sql.SparkSession,
-                     pairsDir: String): DataFrame = {
-    val dirs = committedVersions(spark, pairsDir)
-    require(dirs.nonEmpty, s"no committed pair versions under $pairsDir")
-    spark.read.parquet(dirs: _*)
-  }
+                     pairsDir: String): DataFrame = committed(spark, pairsDir)
 
   /** Highest COMMITTED version of the upserted table, if any exists. */
   def latestTable(spark: org.apache.spark.sql.SparkSession,
                   tableDir: String): Option[DataFrame] =
-    committedVersions(spark, tableDir).lastOption
-      .map(d => spark.read.parquet(d))
+    graft.util.IndexStore.committed(spark, tableDir).lastOption
+      .map(v => spark.read.parquet(versionDir(tableDir, v)))
 }

@@ -163,14 +163,13 @@ class AnnIndexSpec extends SparkSpec {
     // holding ONE file (the compact repartitions ON the cell id), so
     // the file count is exactly the number of non-empty cells
     val batchDirs = new java.io.File(s"$root/codes").listFiles().toSeq
-      .filter(_.getName.startsWith("cell="))
-      .flatMap(_.listFiles().toSeq.map(_.getName)).distinct
+      .filter(_.isDirectory).map(_.getName)
     assert(batchDirs === Seq("batch=0"),
       s"compaction left non-folded batch partitions: $batchDirs")
     val after = parquetFiles()
     assert(after.size < beforeFiles,
       s"compaction did not reduce the file count ($beforeFiles -> ${after.size})")
-    assert(after.size === after.map(_.getParentFile.getParentFile).distinct.size,
+    assert(after.size === after.map(_.getParentFile).distinct.size,
       "compaction left more than one file in some cell")
     e.unpersist()
   }
@@ -207,6 +206,45 @@ class AnnIndexSpec extends SparkSpec {
     e.unpersist()
   }
 
+  test("a batch torn inside its job commit (some cells, no marker) is never read or folded") {
+    // job commit moves a batch's cell dirs into place one at a time, so
+    // a crash inside it leaves batch 1 in some cells only. Queries and
+    // compaction must ignore the batch, the high-water mark must stay
+    // below it (else the streaming replay is skipped and the missing
+    // vectors are lost), and the replay must restore the full answer.
+    val e = clustered(64).cache()
+    val root = tmpRoot("tornbatch")
+    AnnIndex.build(e.filter(col("vec_id") < 300), root)
+    val qv = e.filter(col("vec_id") === 310).select("v")
+      .first().getSeq[Double](0)
+    def ask(): Seq[String] = AnnIndex.query(spark, root, qv, nprobe = 3,
+      n = 10).collect().map(_.toString).toSeq
+    val baseAns = ask()
+    val b1 = e.filter(col("vec_id") >= 300)
+    AnnIndex.append(b1, root, batchId = 1)
+    val fullAns = ask()
+    assert(fullAns !== baseAns, "test shape: batch 1 must change the answer")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: (if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Nil)
+    val files = walk(new java.io.File(s"$root/codes"))
+    def ofBatch1(f: java.io.File) = f.getPath.split('/').contains("batch=1")
+    val leaves = files.filter(d => d.isDirectory && ofBatch1(d) &&
+      d.listFiles().exists(_.getName.endsWith(".parquet")))
+    assert(leaves.size > 1, "test shape: batch 1 must span several cells")
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(leaves.head.getPath), true))
+    files.filter(f => f.getName == "_SUCCESS" && ofBatch1(f)).foreach(_.delete())
+    assert(ask() === baseAns, "a partly committed batch answers queries")
+    AnnIndex.compact(spark, root)
+    assert(AnnIndex.compactedThrough(spark, root) === 0L,
+      "compaction folded a partly committed batch")
+    assert(ask() === baseAns)
+    graft.streaming.Streams.annIndexIngest(b1.toDF(), root, batchId = 0)
+    assert(ask() === fullAns, "the replay did not restore the full answer")
+    e.unpersist()
+  }
+
   test("a compaction swap torn mid-rename heals on the next exists()") {
     // simulate the crash window between promote's two renames: the old
     // root stepped aside, the completed fold (marker present) was never
@@ -223,7 +261,7 @@ class AnnIndexSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootP = new org.apache.hadoop.fs.Path(root)
-    val staging = graft.util.AtomicSwap.stagingPath(rootP)
+    val staging = graft.util.IndexStore.stagingPath(rootP)
     assert(fs.rename(rootP, staging), "test setup: rename to staging")
     fs.mkdirs(new org.apache.hadoop.fs.Path(root + ".old"))
     assert(AnnIndex.exists(spark, root),

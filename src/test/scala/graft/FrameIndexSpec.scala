@@ -386,7 +386,7 @@ class FrameIndexSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val rootP = new org.apache.hadoop.fs.Path(root)
-    val staging = graft.util.AtomicSwap.stagingPath(rootP)
+    val staging = graft.util.IndexStore.stagingPath(rootP)
     assert(fs.rename(rootP, staging), "test setup: rename to staging")
     assert(FrameIndex.exists(spark, root),
       "torn swap read as 'no index' instead of healing")

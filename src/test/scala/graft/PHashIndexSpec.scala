@@ -128,4 +128,14 @@ class PHashIndexSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("folded"))
   }
+
+  test("append to a root with no index is refused and writes nothing") {
+    val root = tmpRoot("unbuilt")
+    val e = intercept[IllegalArgumentException] {
+      PHashIndex.append(corpus, root, ingestId = 1)
+    }
+    assert(e.getMessage.contains("build the backfill first"), e.getMessage)
+    assert(!new java.io.File(root).exists, "a refused append wrote into the root")
+    assert(!PHashIndex.exists(spark, root))
+  }
 }

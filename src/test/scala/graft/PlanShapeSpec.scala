@@ -417,6 +417,57 @@ class PlanShapeSpec extends SparkSpec {
     assert(built.isEmpty, s"keys launched Spark jobs at build time: ${built.mkString(", ")}")
   }
 
+  /** Spark jobs `body` launches, attributed by job group. */
+  private def jobCount(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("counted", "counted")
+      try body finally sc.clearJobGroup()
+      // listener events arrive in order: once a sentinel job is seen,
+      // every job the body started has been counted
+      sc.setJobGroup("count-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime + 30e9.toLong
+      while (!jobs.containsKey("count-sentinel") && System.nanoTime < deadline)
+        Thread.sleep(10)
+      assert(jobs.containsKey("count-sentinel"), "listener never saw the sentinel job")
+    } finally sc.removeSparkListener(listener)
+    Option(jobs.get("counted")).map(_.intValue).getOrElse(0)
+  }
+
+  test("stored-index probes and appends read declared schemas: no inference jobs") {
+    // reading a stored table without a declared schema runs a
+    // footer-inference job per table, so these counts rise if one does
+    import org.apache.spark.sql.functions._
+    import graft.operators.{AnnIndex, InvertedIndex}
+    val emb = graft.queries.LlmOps.embDouble(
+        graft.sources.Tables.embeddings(spark, sf0001))
+      .select(col("vec_id"), transform(col("v"), x => x / col("nrm")).as("v"))
+      .localCheckpoint(true)
+    val qv = emb.filter(col("vec_id") === 0).select("v").first().getSeq[Double](0)
+    val ann = java.nio.file.Files.createTempDirectory("graft_jobs_ann").toString
+    AnnIndex.build(emb.filter(col("vec_id") < 400), ann)
+    val inv = java.nio.file.Files.createTempDirectory("graft_jobs_inv").toString
+    InvertedIndex.build(graft.sources.Tables.documents(spark, sf0001), inv)
+    val annQuery = jobCount(AnnIndex.query(spark, ann, qv, nprobe = 3).collect())
+    val annAppend = jobCount(
+      AnnIndex.append(emb.filter(col("vec_id") >= 400), ann, batchId = 1))
+    val invQuery = jobCount(InvertedIndex.query(spark, inv,
+      Seq("spark", "window", "dup", "merge")).collect())
+    info(s"jobs: AnnIndex.query $annQuery, AnnIndex.append $annAppend, " +
+      s"InvertedIndex.query $invQuery")
+    assert(annQuery <= 5, s"AnnIndex.query ran $annQuery jobs")
+    assert(annAppend <= 5, s"AnnIndex.append ran $annAppend jobs")
+    assert(invQuery <= 6, s"InvertedIndex.query ran $invQuery jobs")
+  }
+
   test("whole-stage codegen covers the hot path of the flagship") {
     // AQE finalizes the plan only on execution; codegen'd operators carry
     // the "*(n)" prefix in the executed plan string.

@@ -87,7 +87,7 @@ class RetrievalSpec extends SparkSpec {
     def batchDirs(): Seq[String] = {
       val p = new org.apache.hadoop.fs.Path(s"$root/postings")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.globStatus(new org.apache.hadoop.fs.Path(s"$root/postings/tb=*/batch=*"))
+      fs.globStatus(new org.apache.hadoop.fs.Path(s"$root/postings/batch=*"))
         .map(_.getPath.getName).distinct.toSeq.sorted
     }
     assert(batchDirs() === Seq("batch=0", "batch=1", "batch=2"))
@@ -121,9 +121,13 @@ class RetrievalSpec extends SparkSpec {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(p), "build/append did not write the dfs dictionary")
     val withDict = rows(InvertedIndex.query(spark, root, terms, k = 20))
-    // partial coverage: drop batch 0's dictionary partitions only
-    fs.globStatus(new org.apache.hadoop.fs.Path(s"$root/dfs/tb=*/batch=0"))
-      .foreach(st => fs.delete(st.getPath, true))
+    // partial coverage: a dictionary write torn inside its job commit —
+    // half of batch 0's bucket dirs landed and its marker never did
+    val dfsBuckets =
+      fs.globStatus(new org.apache.hadoop.fs.Path(s"$root/dfs/batch=0/tb=*"))
+    assert(dfsBuckets.length > 1, "fixture too small to split buckets")
+    dfsBuckets.take(dfsBuckets.length / 2).foreach(st => fs.delete(st.getPath, true))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$root/dfs/batch=0/_SUCCESS"), false))
     assert(rows(InvertedIndex.query(spark, root, terms, k = 20)) === withDict,
       "partial dfs coverage changed the answer (fallback not taken?)")
     // no dictionary at all: the pre-dfs artifact shape
@@ -148,7 +152,7 @@ class RetrievalSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(s"$root/postings")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$root/postings/tb=*/batch=*/part-*"))
+      s"$root/postings/batch=*/tb=*/part-*"))
     val byDir = files.groupBy(_.getPath.getParent.toString)
     assert(byDir.nonEmpty)
     val fat = byDir.filter(_._2.length > 1).keys.toSeq.sorted
@@ -173,7 +177,7 @@ class RetrievalSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     for (st <- fs.globStatus(new org.apache.hadoop.fs.Path(
-           s"$root/postings/tb=*/batch=1")))
+           s"$root/postings/batch=1")))
       fs.delete(st.getPath, true)
     assert(rows(InvertedIndex.query(spark, root, terms, k = 20))
       === baseAnswer,
@@ -186,7 +190,7 @@ class RetrievalSpec extends SparkSpec {
   test("a PARTIAL postings commit with no stats row is invisible (write order)") {
     // The realistic crash under the postings-FIRST/stats-LAST ordering:
     // the multi-partition postings job died mid-commit, leaving SOME
-    // tb=*/batch=N dirs, and the (last-written) stats row never landed.
+    // batch=N/tb=* dirs, and the (last-written) stats row never landed.
     // The batch intersection must mask the partial postings — scores
     // must equal the pre-append index, not a blend of full stats and
     // half a batch's postings — and a replay must repair in place.
@@ -207,7 +211,7 @@ class RetrievalSpec extends SparkSpec {
       fs.delete(st.getPath, true)
     // and only HALF the batch's postings buckets survived the crash
     val bucketDirs = fs.globStatus(new org.apache.hadoop.fs.Path(
-      s"$root/postings/tb=*/batch=1"))
+      s"$root/postings/batch=1/tb=*"))
     assert(bucketDirs.length > 1, "fixture too small to split buckets")
     for (st <- bucketDirs.take(bucketDirs.length / 2))
       fs.delete(st.getPath, true)

@@ -518,7 +518,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedBoilerplate(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed boilerplate union diverges from the batch twin")
@@ -554,7 +554,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedContaminations(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed contamination union diverges from the declared key")
@@ -602,7 +602,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedFrameHits(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed frame-hit union diverges from the one-shot screen")
@@ -641,7 +641,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedFramePairs(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "screen-then-admit union diverges from the corpus-wide pair set")
@@ -689,7 +689,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedOutliers(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed outlier union diverges from the batch twin")
@@ -1340,7 +1340,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedAssignments(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed assignment union diverges from the batch twin")
@@ -1377,7 +1377,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedEncodings(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed encoding union diverges from the batch twin")
@@ -1419,7 +1419,7 @@ class StreamingSpec extends SparkSpec {
     try groups.foreach { g => mem.addData(g); q.processAllAvailable() }
     finally q.stop()
     def committed(): Seq[String] =
-      Streams.committedPredictions(spark, out)
+      Streams.committed(spark, out)
         .collect().map(_.toString).sorted.toSeq
     assert(committed() === want,
       "streamed prediction union diverges from the batch twin")
