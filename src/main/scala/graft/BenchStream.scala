@@ -388,7 +388,7 @@ object BenchStream {
         clean(idx, out)
         // stored side = the reference slice; ~80% of ingest docs carry a
         // stored base text, so the broadcast-join screen path is hot
-        graft.operators.PHash.storeFrameIndex(
+        graft.operators.FrameIndex.build(
           refDocs.toDF("doc_id", "text"), idx)
         driveForeach(ingestDocs, Seq("doc_id", "text"),
           (b, id) => Streams.frameDedupBatch(b, idx, out, id),

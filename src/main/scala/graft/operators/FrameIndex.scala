@@ -170,8 +170,8 @@ object FrameIndex {
 
   /** The stored hot-hash set (empty frame if the artifact is missing —
     * a crash between the frames write and [[refreshHot]] leaves a
-    * usable, merely uncapped, index). Callers broadcast it into
-    * [[PHash.screenFrames]]/[[PHash.screenAdmit]]. */
+    * usable, merely uncapped, index). Callers pass it to
+    * [[PHash.screenFrames]] and [[PHash.ingestScreenFused]]. */
   def hotHashes(s: SparkSession, root: String): DataFrame = {
     if (IndexStore.isCommitted(s, hotDir(root)))
       // static schema: the artifact layout is ours, and schema inference
@@ -235,7 +235,7 @@ object FrameIndex {
   }
 
   /** The stored (doc_id, fhash, n_fr) rows across every COMMITTED
-    * ingest — what [[PHash.screenFrames]] / [[PHash.screenAdmit]]
+    * ingest — what [[PHash.screenFrames]] / [[PHash.ingestScreenFused]]
     * screen against. Restricted to committed partitions (a static
     * partition filter — pruned at listing time, no data read): a
     * crashed append's partial rows would otherwise screen with a wrong

@@ -95,16 +95,6 @@ object PHash {
     docs.select(col(idCol).as("doc_id"),
       graft.functions.PHashExprs.dhashString(col(textCol)).as("phash"))
 
-  /** The legacy stacked-projection form of [[signatures]] — the
-    * executable geometry spec the kernel is law-pinned against. */
-  private[graft] def signaturesViaColumns(docs: DataFrame,
-                                          idCol: String = "doc_id",
-                                          textCol: String = "text")
-      : DataFrame =
-    docs.select(col(idCol).as("doc_id"), byteValues(textCol).as("pbytes"))
-      .select(col("doc_id"), pixels("pbytes").as("px"))
-      .select(col("doc_id"), dhash(col("px")).as("phash"))
-
   /** Decision frame (doc_id, phash, cluster_id, is_keeper): connected
     * components over the hamming-≤-maxHamming perceptual-hash graph,
     * keeper = min doc_id of the component — SimHash's signature-grain
@@ -174,17 +164,6 @@ object PHash {
         col("text").cast("binary"), frameBytes, stride, exclude))
         .as("fhash"))
 
-  /** The legacy hex-string form of [[frameSignatures]] — the executable
-    * geometry spec the byte kernel is law-pinned against. */
-  private[graft] def frameSignaturesViaColumns(
-      frames: org.apache.spark.sql.Dataset[SampledFrame]): DataFrame =
-    frames.toDF()
-      .select(col("doc_id"), hex(col("frame")).as("fhex"))
-      .select(col("doc_id"), binaryByteValues("fhex").as("pbytes"))
-      .select(col("doc_id"), pixels("pbytes").as("px"))
-      .select(col("doc_id"), dhash(col("px")).as("fhash"))
-      .distinct()
-
   /** DIRECTED frame-grain containment pairs — the video-analog of
     * [[graft.queries.CorpusOps]]'s q_dedup_containment (sub-document →
     * sub-SEQUENCE duplication): doc_a is reported against doc_b when
@@ -244,8 +223,7 @@ object PHash {
 
   private def frameGrain(docs: DataFrame, frameBytes: Int, stride: Int,
                          num: Int, den: Int,
-                         dfCap: Long = DefaultFrameDfCap,
-                         docSig: Option[DataFrame] = None): FrameGrain = {
+                         dfCap: Long = DefaultFrameDfCap): FrameGrain = {
     // CONTENT grain (the DedupOps.grainedNearDup discipline): identical
     // payloads — the dominant duplicate population, a re-posted video —
     // share one frame-signature set, so sampling, hashing, and ALL pair
@@ -253,43 +231,22 @@ object PHash {
     // narrow membership joins. Doc grain would pay df² per frame hash
     // on every copy of a hot payload (100 replicas ⇒ 10,000 join rows
     // per hash) for pairs whose containment is 1.0 by identity.
-    //
-    // docSig: the FUSED micro-batch mode (frameIndexIngest): the caller
-    // already holds the checkpointed doc-grain signature set, so the
-    // rep-grain set is a semi-join restriction of it (reps are docs;
-    // distinct (doc_id, fhash) restricted to rep ids ≡ re-sampling the
-    // rep payloads) and NOTHING here checkpoints — every derivation
-    // stays lazy and executes inside the caller's single write job,
-    // with ReuseExchange deduplicating the repeated subtrees. Each
-    // localCheckpoint is a separate Spark action; at micro-batch grain
-    // the ~36-tiny-jobs-per-batch floor WAS the measured throughput
-    // (PLANS_r18), so the batch face trades recompute-safety
-    // (worthless on 1000-doc inputs) for job count.
-    val g0 = docs.groupBy(col("text"))
+    val g = docs.groupBy(col("text"))
       .agg(min(col("doc_id")).as("rep"),
            collect_list(col("doc_id")).as("members"))
-    val g = if (docSig.isDefined) g0 else g0.localCheckpoint(true)
+      .localCheckpoint(true)
     // hot-hash df cap BEFORE any pair work: one window count on the
     // same fhash key the pair join shuffles on; a hash at rep-grain
     // df > dfCap leaves the signature sets entirely (intersection AND
     // n_fr denominator — consistent containment semantics). Never
     // fires on the fixture (max df 4); bounds Σ df² at dfCap² per hash
     // on a real corpus.
-    val sigRaw = docSig match {
-      case Some(ds) =>
-        ds.join(g.select(col("rep").as("doc_id")), Seq("doc_id"),
-          "left_semi")
-      case None =>
-        frameSignaturesFused(
-          g.select(col("rep").as("doc_id"), col("text")),
-          frameBytes, stride)
-    }
-    val sigCapped = sigRaw
+    val sig = frameSignaturesFused(
+        g.select(col("rep").as("doc_id"), col("text")), frameBytes, stride)
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("fhash")))
       .filter(col("df") <= dfCap).drop("df")
-    val sig = // feeds sizes + both join sides (lazy in fused mode)
-      if (docSig.isDefined) sigCapped else sigCapped.localCheckpoint(true)
+      .localCheckpoint(true) // feeds sizes + both join sides
     val sizes = sig.groupBy("doc_id").agg(count(lit(1)).as("n_fr"))
     val shared = sig.as("a")
       .join(sig.as("b"), col("a.fhash") === col("b.fhash") &&
@@ -312,11 +269,9 @@ object PHash {
   def frameContainment(docs: DataFrame, frameBytes: Int = NPix,
                        stride: Int = 2, num: Int = 4, den: Int = 5,
                        dfCap: Long = DefaultFrameDfCap,
-                       precomputedSig: Option[DataFrame] = None,
                        ordered: Boolean = true)
       : DataFrame = {
-    val fg = frameGrain(docs, frameBytes, stride, num, den, dfCap,
-      precomputedSig)
+    val fg = frameGrain(docs, frameBytes, stride, num, den, dfCap)
     val (g, sizes, repPairs) = (fg.groups, fg.sizes, fg.repPairs)
     // narrow (rep, doc_id) membership — never the member array carried
     // per intermediate row (quadratic memory on a hot group)
@@ -379,41 +334,20 @@ object PHash {
         (col("doc_id") === col("cluster_id")).cast("long"))
   }
 
-  /** Persist the frame-hash index of `docs` — the at-rest face of
-    * [[frameContainment]]'s corpus side: DISTINCT (doc_id, fhash) rows,
-    * fhash-sorted for row-group stats. Built once over the reference
-    * corpus (corpora at rest change rarely; video ingest never stops),
-    * then every incoming batch screens against it via [[screenFrames]]
-    * with zero corpus re-hash — the DedupIndex / DecontamIndex stored-
-    * artifact discipline applied to the video modality. */
-  def storeFrameIndex(docs: DataFrame, root: String,
-                      frameBytes: Int = NPix, stride: Int = 2,
-                      dfCap: Long = DefaultFrameDfCap): Unit = {
-    val sig = frameSignaturesFused(docs, frameBytes, stride)
-      .localCheckpoint(true) // feeds the write + the hot-set agg
-    sig.sortWithinPartitions("fhash")
-      .write.mode("overwrite").parquet(root)
-    // the frozen corpus's hot-hash set (boilerplate frames — tiny),
-    // materialized once beside the index so every streaming screen
-    // gets the df-cap guard as a broadcast, never a corpus scan.
-    // Aggregated from the checkpointed signature frame — re-reading
-    // the just-written parquet was a second full corpus pass.
-    hotFrameHashes(sig, dfCap)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root.hot")
-  }
-
   /** Directed frame-grain containment of a (small) incoming batch
     * against the STORED frame-hash index: (batch_doc, corpus_doc,
     * n_fr, n_inter, containment) for every stored doc that contains
     * ≥ num/den of the batch doc's distinct frame hashes — "is this
     * upload a clip of something we already have?", answered per batch
-    * in O(batch ⋈ matching postings) with the corpus never re-hashed
-    * and never shuffled: the batch's frame signatures BROADCAST onto
-    * the streamed stored rows (the DedupIndex.queryBatch shape), so
+    * in O(batch ⋈ matching postings) with the corpus never re-hashed:
+    * one equi-join of the batch's frame signatures onto the stored rows
+    * (the DedupIndex.queryBatch shape), broadcast or shuffle as
+    * Catalyst sizes the batch — a micro-batch ships as a broadcast, so
     * per-batch cost is the stored scan + a broadcast hash join however
-    * large the corpus. Join fan-out is bounded by the true answer size
-    * (every stored doc containing a batch frame is a candidate) —
+    * large the corpus, and a corpus-scale backfill wave takes the
+    * exchange instead of an OOMing broadcast. Join fan-out is bounded
+    * by the true answer size (every stored doc containing a batch
+    * frame is a candidate) —
     * EXCEPT at hot frame hashes (black frames: one batch frame hash at
     * stored-df 10⁶ fans out 10⁶ rows), so `hotHashes` — the stored
     * corpus's over-df-cap hash set, materialized at rest by
@@ -425,7 +359,6 @@ object PHash {
   def screenFrames(batchDocs: DataFrame, stored: DataFrame,
                    frameBytes: Int = NPix, stride: Int = 2,
                    num: Int = 4, den: Int = 5,
-                   docBroadcastLimit: Long = 20000L,
                    hotHashes: Option[DataFrame] = None): DataFrame = {
     // the batch signature pass is ONE fused kernel map (windowing,
     // dHash, dedup, hot-hash exclusion — frameSignaturesFused), and the
@@ -447,19 +380,8 @@ object PHash {
         // n_frb, not n_fr: the stored rows carry their own n_fr column
         size(col("fhs")).cast("long").as("n_frb"),
         explode(col("fhs")).as("bhash"))
-    // adaptive pick: a
-    // micro-batch-sized input ships as a broadcast so the stored
-    // corpus never shuffles; a corpus-scale BACKFILL WAVE crosses the
-    // gate and takes the plain equi-join (AQE plans the exchange) —
-    // forcing the broadcast there is how a re-crawl OOMs. Both
-    // branches are pinned bit-equal in FrameIndexSpec. Gating on the
-    // batch DOC count (vs the old shingled-doc count) is conservative:
-    // it broadcasts never more often, and costs a count on the raw
-    // batch instead of a signature-pass action.
-    val gate: DataFrame => DataFrame =
-      if (batchDocs.count() <= docBroadcastLimit) broadcast else identity
     stored
-      .join(gate(b), col("fhash") === col("bhash"))
+      .join(b, col("fhash") === col("bhash"))
       .groupBy(col("batch_doc"), col("doc_id").as("corpus_doc"))
       .agg(count(lit(1)).as("n_inter"), max(col("n_frb")).as("n_fr"))
       .filter(col("n_inter") * den >= col("n_fr") * num)
@@ -531,115 +453,15 @@ object PHash {
                CAST(src = MIN(dst) AS BIGINT) AS is_keeper
         FROM reach GROUP BY src ORDER BY doc_id"""
 
-  /** BOTH-direction frame-containment pairs of an incoming batch
-    * against the stored frame index, in [[frameContainment]]'s
-    * (doc_a = contained, doc_b = container) shape — the screen face of
-    * the screen-then-admit loop ([[graft.streaming.Streams
-    * .frameIndexIngest]]): an upload can be a clip of a stored video
-    * (batch ⊂ stored) AND a stored clip can sit inside the new longer
-    * upload (stored ⊂ batch); grading the second direction needs the
-    * STORED doc's frame-count denominator, which rides on every stored
-    * row (FrameIndex denormalizes n_fr) — so one fhash equi-join with
-    * the batch signatures BROADCAST answers both directions with the
-    * corpus never re-aggregated. `excludeStored` anti-joins those
-    * stored doc_ids out of the candidates (the replay guard: a
-    * re-delivered batch is already IN the index and must not match its
-    * own rows — within-batch pairs are the caller's separate step). */
-  def screenAdmit(batchDocs: DataFrame, stored: DataFrame,
-                  excludeStored: DataFrame,
-                  frameBytes: Int = NPix, stride: Int = 2,
-                  num: Int = 4, den: Int = 5,
-                  docBroadcastLimit: Long = 20000L,
-                  hotHashes: Option[DataFrame] = None): DataFrame = {
-    // the screenFrames hot-hash guard: stored-corpus boilerplate hashes
-    // leave the batch signatures before the join (and the n_b
-    // denominator); the stored-side n_c denominator is as-written —
-    // a hot-frame-heavy stored clip grades conservatively, documented.
-    // The signature pass is the fused kernel map (see screenFrames):
-    // hot exclusion runs in-kernel and the surviving-frame count rides
-    // every exploded row, so the two checkpoints, the bsize
-    // aggregation, and its re-attach join are gone.
-    val hot: Array[Long] = hotHashes
-      .map(_.select("fhash").collect().map(_.getLong(0)))
-      .getOrElse(Array.emptyLongArray)
-    val b = batchDocs.select(col("doc_id"),
-        graft.functions.PHashExprs.frameHashSet(
-          col("text").cast("binary"), frameBytes, stride, hot).as("fhs"))
-      .select(col("doc_id").as("bd"),
-        size(col("fhs")).cast("long").as("n_b"),
-        explode(col("fhs")).as("bhash"))
-    // the screenFrames adaptive pick — every batch-derived frame ships
-    // broadcast only while the batch is micro-batch-sized
-    val gate: DataFrame => DataFrame =
-      if (batchDocs.count() <= docBroadcastLimit) broadcast else identity
-    val cand = stored.join(
-      gate(excludeStored.select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
-    val inter = cand
-      .join(gate(b), col("fhash") === col("bhash"))
-      .groupBy(col("bd"), col("doc_id").as("cd"))
-      .agg(count(lit(1)).as("n_inter"), max(col("n_fr")).as("n_c"),
-           max(col("n_b")).as("n_b"))
-      .localCheckpoint(true) // feeds both direction filters
-    def dir(aId: Column, bId: Column, nA: Column, nB: Column) = inter
-      .filter(col("n_inter") * den >= nA * num)
-      .select(aId.as("doc_a"), bId.as("doc_b"), nA.as("n_a"),
-        nB.as("n_b"), col("n_inter"),
-        round(col("n_inter").cast("double") / nA.cast("double"), 6)
-          .as("containment"))
-    dir(col("bd"), col("cd"), col("n_b"), col("n_c"))
-      .unionByName(dir(col("cd"), col("bd"), col("n_c"), col("n_b")))
-  }
-
-  /** [[screenAdmit]] for the MICRO-BATCH ingest path, row-identical by
-    * construction, restructured for job count: takes the batch's
-    * already-checkpointed (doc_id, fhash) signature set instead of
-    * re-sampling the payloads, keeps every derivation lazy (no internal
-    * checkpoints, no count gate — the batch side ALWAYS broadcasts; a
-    * foreachBatch micro-batch is trigger-bounded by contract, corpus-
-    * scale backfill waves belong on [[screenAdmit]]'s adaptive gate),
-    * and emits BOTH containment directions from each candidate pair in
-    * ONE pass — the two-direction struct explodes per inter row, so
-    * the stored-corpus join runs once without a checkpoint to protect
-    * it. PLANS_r18 measured the unfused screen at 14 actions
-    * per 1000-doc batch; this form contributes zero of its own (it all
-    * runs inside the caller's output-write job). */
-  def screenAdmitFused(bsigAll: DataFrame, stored: DataFrame,
-                       excludeStored: DataFrame,
-                       num: Int = 4, den: Int = 5,
-                       hotHashes: Option[DataFrame] = None): DataFrame = {
-    val bsig = hotHashes.fold(bsigAll)(h =>
-      bsigAll.join(broadcast(h.select("fhash")), Seq("fhash"), "left_anti"))
-    val bsize = bsig.groupBy("doc_id").agg(count(lit(1)).as("n_fr"))
-    val cand = stored.join(
-      broadcast(excludeStored.select(col("doc_id"))),
-      Seq("doc_id"), "left_anti")
-    val inter = cand.as("c")
-      .join(broadcast(bsig.as("b")), col("c.fhash") === col("b.fhash"))
-      .groupBy(col("b.doc_id").as("bd"), col("c.doc_id").as("cd"))
-      .agg(count(lit(1)).as("n_inter"), max(col("c.n_fr")).as("n_c"))
-      .join(broadcast(bsize.select(col("doc_id").as("bd"),
-        col("n_fr").as("n_b"))), Seq("bd"))
-    inter
-      .select(col("n_inter"), explode(array(
-        struct(col("bd").as("doc_a"), col("cd").as("doc_b"),
-               col("n_b").as("n_a"), col("n_c").as("n_b")),
-        struct(col("cd").as("doc_a"), col("bd").as("doc_b"),
-               col("n_c").as("n_a"), col("n_b").as("n_b")))).as("p"))
-      .filter(col("n_inter") * den >= col("p.n_a") * num)
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.n_a").as("n_a"), col("p.n_b").as("n_b"), col("n_inter"),
-        round(col("n_inter").cast("double") / col("p.n_a").cast("double"),
-          6).as("containment"))
-  }
-
   /** The ENTIRE per-batch screen of the screen-then-admit loop —
     * within-batch containment (content grain, [[frameContainment]]
-    * semantics) AND the both-direction stored screen
-    * ([[screenAdmitFused]] semantics) — as ONE candidate pass over one
-    * join: the batch's rep-grain signature set probes a single unioned
-    * candidate side (stored rows tagged `s` ∪ the rep set itself tagged
-    * `b`), and every output branch (within-intra, within-inter, cross
+    * semantics) AND the both-direction stored screen (an upload may be
+    * a clip of a stored video, and a stored clip may sit inside the new
+    * longer upload — graded by the stored row's denormalized n_fr, the
+    * batch's re-delivered ids anti-joined away) — as ONE candidate pass
+    * over one join: the batch's rep-grain signature set probes a single
+    * unioned candidate side (stored rows tagged `s` ∪ the rep set itself
+    * tagged `b`), and every output branch (within-intra, within-inter, cross
     * both directions) derives from the one grouped pair frame. The two
     * branch filters that used to force separate joins become PER-ROW
     * FLAGS on the rep signatures — `over_cap` (the within family's
@@ -651,9 +473,10 @@ object PHash {
     * through the membership list (identical signature sets ⇒ identical
     * n_inter/n_b for every member, the frameContainment argument).
     * Output is row-identical to
-    * `frameContainment(ordered=false) ∪ screenAdmitFused` on the same
-    * batch — pinned against the unfused pair in FrameIndexSpec on a
-    * corpus where BOTH the df cap and the hot set fire — but the plan
+    * `frameContainment(ordered=false)` ∪ the unfused two-direction
+    * stored screen on the same batch — pinned against that unfused
+    * reference pair in FrameIndexSpec on a corpus where BOTH the df cap
+    * and the hot set fire — but the plan
     * runs ~half the exchanges: one pair groupBy instead of two, one
     * size aggregation carrying both denominators, one membership
     * expansion frame shared by all branches. At a trigger-bounded
@@ -733,8 +556,8 @@ object PHash {
     // tag `b` rows are within-batch rep pairs (one directed pair per
     // row — the symmetric join already produced both orders) expanded
     // through BOTH memberships; tag `s` rows are stored hits expanded
-    // through the batch membership, emitting both directions
-    // (screenAdmitFused's explode). Size/membership joins attach to
+    // through the batch membership, emitting both directions (a
+    // two-struct explode). Size/membership joins attach to
     // the single stream; the cid-side joins are LEFT (stored ids have
     // no batch group) and unused fields ride as nulls.
     val attached = inter

@@ -24,14 +24,17 @@ import graft.util.IndexStore
   * Hadoop job-commit protocol (no torn two-table window).
   *
   * Query scale shape: the batch is hashed in flight (one codegen'd
-  * map-side pass — [[PHash.signatures]]), its band rows BROADCAST for
-  * increment-sized batches, so candidate generation is one streaming
-  * scan of the stored band table with zero corpus shuffle; the hamming
-  * verify reads the signature already on the candidate row. Recall is
-  * EXACT by pigeonhole (maxHamming < b), so the keys are SQL-oracled —
-  * strictly stronger than the ANN family's test oracles. 4 rows × ~32
-  * bytes per image; a 10¹⁰-image corpus is a ~1.3 TB artifact, scanned
-  * per batch but never shuffled, and compaction bounds its file count.
+  * map-side pass — [[PHash.signatures]]) and its band rows probe the
+  * stored band table in one join, each pair kept at its first shared
+  * band. Catalyst broadcasts an increment-sized batch, so candidate
+  * generation is one streaming scan of the stored band table with zero
+  * corpus shuffle, and plans the band-keyed exchange for a corpus-scale
+  * one; the hamming verify reads the signature already on the candidate
+  * row. Recall is EXACT by pigeonhole (maxHamming < b), so the keys are
+  * SQL-oracled — strictly stronger than the ANN family's test oracles.
+  * 4 rows × ~32 bytes per image; a 10¹⁰-image corpus is a ~1.3 TB
+  * artifact, scanned per batch but never shuffled, and compaction
+  * bounds its file count.
   */
 object PHashIndex {
 
@@ -95,51 +98,79 @@ object PHashIndex {
       sigsDir(root), "ingest", ingestId)
   }
 
-  /** The stored banded rows across every COMMITTED ingest. Static
-    * schema: inference is a footer-reading job the streaming screen
-    * would pay every micro-batch. */
-  def stored(s: SparkSession, root: String): DataFrame =
-    IndexStore.read(s, sigsDir(root), SigsSchema, "ingest",
-        IndexStore.committed(s, sigsDir(root)))
+  /** Ingest ids whose partition carries its commit marker. */
+  private[graft] def committedIngests(s: SparkSession, root: String)
+      : Seq[Long] = IndexStore.committed(s, sigsDir(root))
+
+  /** The stored banded rows of `ingests`. Static schema: inference is
+    * a footer-reading job the streaming screen would pay every
+    * micro-batch. */
+  private def stored(s: SparkSession, root: String,
+                     ingests: Seq[Long]): DataFrame =
+    IndexStore.read(s, sigsDir(root), SigsSchema, "ingest", ingests)
       .select("doc_id", "phash", "band_idx", "band_val")
 
   /** Near-duplicate pairs (batch_doc, corpus_doc, hamming ≤ maxHamming)
     * between an incoming batch and the STORED index. The corpus images
     * are never read — only their 8-byte signatures at rest. Recall is
-    * exact (pigeonhole: maxHamming < b); with the adaptive broadcast
-    * gate an increment ships map-side, a corpus-scale backfill wave
-    * crosses the gate and AQE plans the band-keyed exchange. */
+    * exact (pigeonhole: maxHamming < b). Broadcast or shuffle is
+    * Catalyst's choice from the batch's size. */
   def queryBatch(s: SparkSession, root: String, batchDocs: DataFrame,
-                 maxHamming: Int = 3, b: Int = 4,
-                 docBroadcastLimit: Long = 20000L): DataFrame = {
+                 maxHamming: Int = 3, b: Int = 4): DataFrame = {
     require(maxHamming < b,
       s"pigeonhole needs maxHamming($maxHamming) < bands($b) for recall 1")
-    val rows = sigRows(batchDocs, b).localCheckpoint(true)
-    queryPrepared(s, root, rows, maxHamming,
-      rows.count() <= docBroadcastLimit * b)
+    screen(stored(s, root, committedIngests(s, root))
+        .withColumn("is_stored", lit(true)),
+        sigRows(batchDocs, b), maxHamming, b)
+      .select(col("p_a").as("batch_doc"), col("p_b").as("corpus_doc"),
+        col("hamming"))
   }
 
-  /** [[queryBatch]] from PRECOMPUTED (checkpointed) banded rows — the
-    * ingest path computes them once per batch and shares them across
-    * the within-batch pairing, this query, and the append. */
-  private[graft] def queryPrepared(s: SparkSession, root: String,
-                                   batchRows: DataFrame, maxHamming: Int,
-                                   broadcastBatch: Boolean): DataFrame = {
-    val gate: DataFrame => DataFrame =
-      if (broadcastBatch) broadcast else identity
-    val bb = batchRows.select(col("doc_id").as("batch_doc"),
-      col("phash").as("phash_b"), col("band_idx"), col("band_val"))
-    stored(s, root)
-      .join(gate(bb), Seq("band_idx", "band_val"))
-      .withColumn("hamming",
-        bit_count(col("phash").bitwiseXOR(col("phash_b"))).cast("long"))
+  /** The pair pass of [[graft.streaming.Streams.phashIndexIngest]]:
+    * hamming pairs (doc_a < doc_b, hamming) WITHIN the batch `rows` and
+    * between them and the stored `ingests`, as one scan — the stored
+    * rows whose ids the batch re-delivers are anti-joined away (a
+    * replayed batch is already IN the index and must not match itself),
+    * and the batch rows are unioned in for the within pairs. */
+  private[graft] def ingestPairs(s: SparkSession, root: String,
+                                 ingests: Seq[Long], rows: DataFrame,
+                                 maxHamming: Int = 3, b: Int = 4)
+      : DataFrame = {
+    val others = stored(s, root, ingests)
+      .join(rows.select("doc_id"), Seq("doc_id"), "left_anti")
+      .withColumn("is_stored", lit(true))
+      .unionByName(rows.withColumn("is_stored", lit(false)))
+    screen(others, rows, maxHamming, b)
+      .select(least(col("p_a"), col("p_b")).as("doc_a"),
+        greatest(col("p_a"), col("p_b")).as("doc_b"), col("hamming"))
+  }
+
+  /** (p_a, p_b, hamming): every `batchRows` doc p_a against every
+    * `others` doc p_b (stored rows, `is_stored`, and — on the ingest
+    * path — the batch's own rows, paired only as p_a < p_b) within
+    * `maxHamming`. Two signatures meet once per band they share (band j
+    * is shared iff the j-th (64/b)-bit slice of their XOR is 0, the
+    * [[SimHash.bands]] layout), and only the meeting at their FIRST
+    * shared band survives, so each pair is emitted once with no
+    * distinct. */
+  private def screen(others: DataFrame, batchRows: DataFrame,
+                     maxHamming: Int, b: Int): DataFrame = {
+    val w = 64 / b
+    val mask = if (w == 64) -1L else (1L << w) - 1L
+    val xor = col("ph_a").bitwiseXOR(col("ph_b"))
+    val shared = (0 until b).map(j =>
+      shiftright(xor, j * w).bitwiseAND(lit(mask)) === 0L)
+    val probe = batchRows.select(col("doc_id").as("p_a"),
+      col("phash").as("ph_a"), col("band_idx"), col("band_val"))
+    others.select(col("doc_id").as("p_b"), col("phash").as("ph_b"),
+        col("band_idx"), col("band_val"), col("is_stored"))
+      .join(probe, Seq("band_idx", "band_val"))
+      .filter(col("is_stored") || col("p_a") < col("p_b"))
+      .filter(array_position(array(shared: _*), true) ===
+        col("band_idx") + 1)
+      .withColumn("hamming", bit_count(xor).cast("long"))
       .filter(col("hamming") <= maxHamming)
-      // a pair at hamming h < b − 1 agrees on several bands and matches
-      // once per agreeing band — distinct AFTER the verify so the
-      // distinct's input is already threshold-bounded
-      .select(col("batch_doc"), col("doc_id").as("corpus_doc"),
-        col("hamming"))
-      .distinct()
+      .select("p_a", "p_b", "hamming")
   }
 
   /** Fold every committed ingest partition into the single backfill
@@ -150,7 +181,8 @@ object PHashIndex {
     * crash. */
   def compact(s: SparkSession, root: String): Unit = {
     require(exists(s, root), s"no phash index under $root")
-    IndexStore.compact(s, root, IndexStore.committed(s, sigsDir(root)))(
-      staging => writePrepared(stored(s, root), staging, 0L))
+    val ingests = committedIngests(s, root)
+    IndexStore.compact(s, root, ingests)(
+      staging => writePrepared(stored(s, root, ingests), staging, 0L))
   }
 }

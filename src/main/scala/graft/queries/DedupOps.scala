@@ -1058,12 +1058,12 @@ object DedupOps {
     // ---- The BACKFILL-WAVE shape of the frame index (the
     // q_dedup_index_backfill discipline): a CORPUS-SCALE batch (the
     // 80% split side — a re-crawl of the video corpus) screened
-    // against the stored 20% index. At replica tiers the wave crosses
-    // screenFrames' doc-count broadcast gate and takes the plain
-    // equi-join (AQE plans the exchange) — a forced broadcast of a
-    // corpus-scale frame-signature set is how a re-crawl OOMs. Branch
-    // equivalence (shuffle ≡ broadcast bit-for-bit) pinned in
-    // FrameIndexSpec.
+    // against the stored 20% index. screenFrames is one plain
+    // equi-join, so at replica tiers Catalyst sizes the wave past the
+    // broadcast threshold and plans the exchange — a forced broadcast
+    // of a corpus-scale frame-signature set is how a re-crawl OOMs.
+    // Branch equivalence (shuffle ≡ broadcast bit-for-bit, both
+    // thresholds forced to −1) pinned in FrameIndexSpec.
     "q_frame_index_backfill" -> ((s, d) => {
       import graft.operators.{FrameIndex, PHash}
       val root = Scans.scratch("frameindexbf", s, d)
@@ -1104,9 +1104,10 @@ object DedupOps {
     // — the FIFTH stored index, the image-modality serving twin of
     // q_dedup_phash: the corpus is hashed once into an 8-byte-signature
     // band table and every new batch screens against the stored rows
-    // (one broadcast band join + on-row hamming verify, zero corpus
-    // shuffle). Recall is EXACT by pigeonhole (hamming ≤ 3 < 4 bands),
-    // so unlike the ANN family these keys are SQL-oracled: DuckDB
+    // (one band join, broadcast for an increment-sized batch, plus an
+    // on-row hamming verify: zero corpus shuffle). Recall is EXACT by
+    // pigeonhole (hamming ≤ 3 < 4 bands), so unlike the ANN family
+    // these keys are SQL-oracled: DuckDB
     // recomputes the same dHash from the same bytes and takes the
     // brute-force hamming join over the same %5 split.
     "q_phash_index_query" -> ((s, d) => {
@@ -1124,8 +1125,9 @@ object DedupOps {
 
     // the backfill-wave flip (the q_dedup_index_backfill discipline):
     // a corpus-scale batch (the 80% side — a re-crawl) against the
-    // stored 20% index; at replica tiers it crosses queryBatch's
-    // broadcast gate and AQE plans the band-keyed exchange instead
+    // stored 20% index; at replica tiers Catalyst sizes the batch past
+    // the broadcast threshold and plans the band-keyed exchange instead
+    // (branch equivalence pinned in PHashIndexSpec)
     "q_phash_index_backfill" -> ((s, d) => {
       import graft.operators.PHashIndex
       val root = Scans.scratch("phashbackfill", s, d)

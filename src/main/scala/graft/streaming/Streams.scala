@@ -562,21 +562,21 @@ object Streams {
   }
 
   /** s_phash_index_ingest — continuous perceptual-hash dedup, the
-    * screen-then-admit loop at IMAGE grain (the dedupIndexIngest
-    * discipline on the fifth stored index): each micro-batch of
-    * payloads is
-    *   (1) paired WITHIN itself (banded self-join + exact hamming —
-    *       recall exact by pigeonhole),
-    *   (2) screened against the STORED signature table (one broadcast
-    *       band join, verify on the row — the corpus is never re-hashed
-    *       or shuffled), its own re-delivered rows anti-joined away,
-    *   (3) the union committed as an immutable batchId-named version,
-    *   (4) the batch ADMITTED under its own ingest partition (skipped
-    *       idempotently when a compaction already folded it).
-    * ONE banded-signature pass per batch (checkpointed), shared by all
-    * three consumers — the frameIndexIngest job-count discipline.
-    * Union-over-batches ≡ the corpus-wide hamming-pair set under any
-    * batch slicing (each undirected pair emitted exactly once, by
+    * screen-then-admit loop at IMAGE grain, in [[dedupIndexIngest]]'s
+    * shape on the fifth stored index. Per micro-batch of payloads:
+    *   (1) the batch's banded signature rows (one hash pass, persisted)
+    *       admitted as its OWN ingest partition (skipped idempotently
+    *       when a compaction already folded it);
+    *   (2) ONE pair pass over the stored rows ∪ the batch rows: the
+    *       WITHIN-batch hamming pairs and the CROSS pairs against the
+    *       index, recall exact by pigeonhole (PHashIndex.ingestPairs);
+    *   (3) the pairs committed as an immutable batchId-named version.
+    * Appending first fills the cache, so (2) is planned on the cached
+    * batch's measured size. The pass reads the ingests committed
+    * before (1), less the batch's own partition, and anti-joins the
+    * batch's ids from them, so a replayed batch meets only its own
+    * rows. Union-over-batches ≡ the corpus-wide hamming-pair set under
+    * any batch slicing (each undirected pair emitted exactly once, by
     * whichever batch completes it — pinned in StreamingSpec). */
   def phashIndexIngest(batch: DataFrame, root: String, pairsDir: String,
                        batchId: Long): Unit = {
@@ -584,33 +584,15 @@ object Streams {
     val s = batch.sparkSession
     require(PHashIndex.exists(s, root),
       s"no phash index under $root — build the backfill first (may be empty)")
-    val rows = PHashIndex.sigRows(batch).localCheckpoint(true)
-    val maxHamming = 3
-    val a = rows.select(col("doc_id").as("doc_a"),
-      col("phash").as("ph_a"), col("band_idx"), col("band_val"))
-    val within = a
-      .join(rows.select(col("doc_id").as("doc_b"),
-          col("phash").as("ph_b"), col("band_idx"), col("band_val")),
-        Seq("band_idx", "band_val"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming",
-        bit_count(col("ph_a").bitwiseXOR(col("ph_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming").distinct()
-    val cross = PHashIndex.queryPrepared(s, root, rows, maxHamming,
-        broadcastBatch = true)
-      // replay guard: a re-delivered batch is already IN the index; its
-      // own rows must not match themselves
-      .join(broadcast(batch.select(col("doc_id").as("corpus_doc"))),
-        Seq("corpus_doc"), "left_anti")
-      .select(least(col("batch_doc"), col("corpus_doc")).as("doc_a"),
-        greatest(col("batch_doc"), col("corpus_doc")).as("doc_b"),
-        col("hamming"))
-    within.unionByName(cross)
-      .write.mode("overwrite").parquet(versionDir(pairsDir, batchId))
     val ingestId = batchId + 1
-    if (ingestId > PHashIndex.compactedThrough(s, root))
-      PHashIndex.writePrepared(rows, root, ingestId)
+    val ingests = PHashIndex.committedIngests(s, root).filter(_ != ingestId)
+    val rows = PHashIndex.sigRows(batch).persist()
+    try {
+      if (ingestId > PHashIndex.compactedThrough(s, root))
+        PHashIndex.writePrepared(rows, root, ingestId)
+      PHashIndex.ingestPairs(s, root, ingests, rows)
+        .write.mode("overwrite").parquet(versionDir(pairsDir, batchId))
+    } finally rows.unpersist()
   }
 
   /** s_knn_index_ingest — continuous ANN index maintenance, the
@@ -732,29 +714,23 @@ object Streams {
       .write.mode("overwrite").parquet(versionDir(outDir, batchId))
 
   /** s_dedup_frames — continuous per-frame perceptual screening against
-    * the STORED frame-hash index (operators/PHash.storeFrameIndex: the
-    * reference corpus sampled + dHashed once; video ingest never
-    * stops): each micro-batch of (doc_id, text-as-payload) samples and
-    * hashes ONLY itself, broadcasts its frame signatures onto the
-    * streamed stored rows, and commits every "this upload is a clip of
-    * a stored video" hit (directed containment ≥ 0.8 at frame grain)
-    * as a version dir. A doc's hits depend only
-    * on the doc and the frozen index, so the union is
-    * batching-invariant and ≡ the one-shot [[graft.operators.PHash
-    * .screenFrames]] on the same docs (pinned); replay exactly-once
-    * via foreachBatch batchId. */
+    * a STORED [[graft.operators.FrameIndex]] (the reference corpus
+    * sampled + dHashed once; video ingest never stops): each
+    * micro-batch of (doc_id, text-as-payload) samples and hashes ONLY
+    * itself, broadcasts its frame signatures onto the streamed stored
+    * rows, and commits every "this upload is a clip of a stored video"
+    * hit (directed containment ≥ 0.8 at frame grain) as a version dir.
+    * The stored rows and the hot-hash guard are read with declared
+    * schemas, committed ingests only. A doc's hits depend only on the
+    * doc and the frozen index, so the union is batching-invariant and
+    * ≡ the one-shot [[graft.operators.PHash.screenFrames]] on the same
+    * docs (pinned); replay exactly-once via foreachBatch batchId. */
   def frameDedupBatch(batch: DataFrame, indexRoot: String, outDir: String,
                       batchId: Long): Unit = {
+    import graft.operators.{FrameIndex, PHash}
     val s = batch.sparkSession
-    // the hot-hash guard rides beside the frozen index (written by
-    // storeFrameIndex); an index stored before the guard existed
-    // screens uncapped, unchanged
-    val hot =
-      if (graft.util.IndexStore.isCommitted(s, s"$indexRoot.hot"))
-        Some(s.read.parquet(s"$indexRoot.hot"))
-      else None
-    graft.operators.PHash
-      .screenFrames(batch, s.read.parquet(indexRoot), hotHashes = hot)
+    PHash.screenFrames(broadcast(batch), FrameIndex.stored(s, indexRoot),
+        hotHashes = Some(FrameIndex.hotHashes(s, indexRoot)))
       .write.mode("overwrite").parquet(versionDir(outDir, batchId))
   }
 
@@ -764,11 +740,11 @@ object Streams {
     *   (1) screened WITHIN itself (PHash.frameContainment — directed
     *       containment among batch-mates, content grain),
     *   (2) screened against the STORED frame index in BOTH directions
-    *       (PHash.screenAdmit: the upload may be a clip of a stored
-    *       video, and a stored clip may sit inside the new longer
-    *       upload — the stored row's denormalized n_fr grades the
-    *       second direction with zero corpus re-aggregation), the
-    *       batch's own re-delivered rows anti-joined away,
+    *       (the upload may be a clip of a stored video, and a stored
+    *       clip may sit inside the new longer upload — the stored
+    *       row's denormalized n_fr grades the second direction with
+    *       zero corpus re-aggregation), the batch's own re-delivered
+    *       rows anti-joined away,
     *   (3) the union committed as an immutable batchId-named version,
     *   (4) the batch ADMITTED as its own ingest partition (skipped
     *       idempotently when a compaction already folded it).

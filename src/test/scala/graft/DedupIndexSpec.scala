@@ -37,20 +37,6 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     sorted(spark.read.parquet(s"$root/docs")
       .select("doc_id", "bands", "ss", "n_sh"))
 
-  /** `body` with both broadcast thresholds at −1: the shuffle branch a
-    * corpus-scale batch takes on its own. */
-  private def shuffleBranch[A](body: => A): A = {
-    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = thresholds.map(t => t -> spark.conf.getOption(t)).toMap
-    thresholds.foreach(spark.conf.set(_, "-1"))
-    try body
-    finally prev.foreach {
-      case (t, Some(v)) => spark.conf.set(t, v)
-      case (t, None)    => spark.conf.unset(t)
-    }
-  }
-
   private def broadcastJoins(df: DataFrame): Seq[SparkPlan] =
     collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
 

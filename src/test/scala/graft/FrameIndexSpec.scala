@@ -1,8 +1,16 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 import graft.operators.{FrameIndex, PHash}
 import graft.sources.Tables
+import graft.streaming.Streams
 
 /** The frame-index-at-rest contract — the fourth stored index's
   * lifecycle laws (DedupIndexSpec / RetrievalSpec / AnnIndexSpec are
@@ -10,7 +18,7 @@ import graft.sources.Tables
   * preserves rows and answers while folding the layout, the high-water
   * mark refuses folded replays, and a torn compaction swap heals on
   * first touch. */
-class FrameIndexSpec extends SparkSpec {
+class FrameIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def tmpRoot(tag: String): String = new java.io.File(
     java.nio.file.Files.createTempDirectory(s"graft_fidx_$tag").toFile,
@@ -21,6 +29,27 @@ class FrameIndexSpec extends SparkSpec {
   private def storedRows(root: String): Seq[String] =
     FrameIndex.stored(spark, root)
       .collect().map(_.toString).sorted.toSeq
+
+  private def broadcastJoins(df: DataFrame): Seq[SparkPlan] =
+    collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+
+  private def isStoreScan(p: SparkPlan): Boolean = p match {
+    case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.exists(_.toString.contains("/frames/ingest="))
+    case _ => false
+  }
+
+  private def storeScans(p: SparkPlan): Seq[SparkPlan] =
+    collect(p) { case s if isStoreScan(s) => s }
+
+  /** True iff a stored frame scan feeds `p` with no join in between:
+    * an exchange over such a subtree moves the stored rows themselves. */
+  private def reachesStore(p: SparkPlan): Boolean = p match {
+    case _: BaseJoinExec => false
+    case q: QueryStageExec => reachesStore(q.plan)
+    case a: AdaptiveSparkPlanExec => reachesStore(a.executedPlan)
+    case other => isStoreScan(other) || other.children.exists(reachesStore)
+  }
 
   private def screen(root: String): Seq[String] =
     PHash.screenFrames(
@@ -105,29 +134,65 @@ class FrameIndexSpec extends SparkSpec {
   }
 
   test("screen branches: forced shuffle ≡ broadcast, bit-for-bit") {
-    // the backfill-wave safety valve: a corpus-scale batch must cross
-    // the doc-count gate and take the plain equi-join, and that branch
-    // must answer exactly like the broadcast one (limit 0 forces it;
-    // the default is the production gate)
+    // the backfill-wave safety valve: a corpus-scale batch takes the
+    // plain equi-join when Catalyst sizes it past the broadcast
+    // threshold, and that branch must answer exactly like the
+    // broadcast one (both thresholds at −1 force it)
     val m5 = pmod(col("doc_id"), lit(5))
     val root = tmpRoot("branches")
     FrameIndex.build(docs.filter(m5 === 0), root)
     val wave = docs.filter(m5 =!= 0)
-    def run(limit: Long): Seq[String] =
-      PHash.screenFrames(wave, FrameIndex.stored(spark, root),
-          docBroadcastLimit = limit)
-        .collect().map(_.toString).sorted.toSeq
-    val bcast = run(Long.MaxValue)
+    def run(): (DataFrame, Seq[String]) = {
+      val df = PHash.screenFrames(wave, FrameIndex.stored(spark, root))
+      (df, df.collect().map(_.toString).sorted.toSeq)
+    }
+    val (bdf, bcast) = run()
     assert(bcast.nonEmpty, "fixture produced no backfill-wave hits")
-    assert(run(0L) === bcast,
+    assert(broadcastJoins(bdf).nonEmpty, "no broadcast branch")
+    val (sdf, shuf) = shuffleBranch(run())
+    assert(shuf === bcast,
       "shuffle branch diverges from the broadcast branch")
-    // same law for the both-direction admit screen
-    def runAdmit(limit: Long): Seq[String] =
-      PHash.screenAdmit(wave, FrameIndex.stored(spark, root),
-          excludeStored = wave, docBroadcastLimit = limit)
-        .collect().map(_.toString).sorted.toSeq
-    assert(runAdmit(0L) === runAdmit(Long.MaxValue),
-      "admit-screen shuffle branch diverges from the broadcast branch")
+    assert(broadcastJoins(sdf).isEmpty,
+      s"shuffle branch still broadcasts:\n${sdf.queryExecution.executedPlan}")
+  }
+
+  test("frameDedupBatch broadcasts the micro-batch: the stored frame " +
+      "rows never cross an exchange") {
+    // the screen joins the batch's frame signatures onto a stream of
+    // the stored rows; an exchange between the stored scan and that
+    // join would move the corpus every batch (the pair aggregate's
+    // exchange above the join moves only pair counts)
+    val m5 = pmod(col("doc_id"), lit(5))
+    val root = tmpRoot("dedupbatch")
+    FrameIndex.build(docs.filter(m5 =!= 0), root)
+    val out = tmpRoot("dedupbatch_out")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    def screens = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .filter(p => storeScans(p).nonEmpty)
+    try {
+      Streams.frameDedupBatch(docs.filter(m5 === 0), root, out, 0L)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime + 30e9.toLong
+      while (screens.isEmpty && System.nanoTime < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(screens.size === 1, s"expected one screen write, saw ${screens.size}")
+    val plan = screens.head
+    assert(Streams.committed(spark, out).count() > 0,
+      "fixture produced no screen hits")
+    assert(collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty,
+      s"screen broadcasts nothing:\n$plan")
+    val moved = collect(plan) { case e: Exchange => e }
+      .filter(e => reachesStore(e.child))
+    assert(moved.isEmpty, s"screen moves the stored frame rows:\n$plan")
   }
 
   test("an uncommitted (crashed) append is invisible: excluded from screens, never folded, redeliverable") {
@@ -294,8 +359,9 @@ class FrameIndexSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val within = PHash.frameContainment(batch, stride = 1, num = 1,
-      den = 2, dfCap = 5, precomputedSig = Some(sig), ordered = false)
-    val cross = PHash.screenAdmitFused(sig, FrameIndex.stored(spark, root),
+      den = 2, dfCap = 5, ordered = false)
+    val cross = PHashReference.screenAdmitFused(sig,
+      FrameIndex.stored(spark, root),
       excludeStored = batch, num = 1, den = 2, hotHashes = Some(hot))
     val unfused = rows(within.unionByName(cross))
     val fused = rows(PHash.ingestScreenFused(batch, sig,
@@ -363,9 +429,8 @@ class FrameIndexSpec extends SparkSpec {
         Multimodal.fromDocuments(batch), PHash.NPix, 1))
         .localCheckpoint(true)
       val unfused = PHash.frameContainment(batch, stride = 1, num = 1,
-          den = 2, dfCap = 3, precomputedSig = Some(sig),
-          ordered = false)
-        .unionByName(PHash.screenAdmitFused(sig, stored,
+          den = 2, dfCap = 3, ordered = false)
+        .unionByName(PHashReference.screenAdmitFused(sig, stored,
           excludeStored = batch, num = 1, den = 2,
           hotHashes = Some(hot)))
         .collect().map(_.toString).sorted.toSeq

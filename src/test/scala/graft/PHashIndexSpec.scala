@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.operators.{PHash, PHashIndex}
 
@@ -7,8 +12,9 @@ import graft.operators.{PHash, PHashIndex}
   * lifecycle laws (DedupIndexSpec / FrameIndexSpec / AnnIndexSpec are
   * the siblings): queryBatch ≡ the brute-force hamming screen (recall
   * is EXACT by pigeonhole, so this is equality, not a recall bound),
-  * append ≡ rebuild, replay exactly-once, both broadcast-gate branches
-  * bit-equal, compaction preserves answers while folding the layout,
+  * append ≡ rebuild, replay exactly-once, the broadcast and shuffle
+  * branches bit-equal, the ingest pair pass streaming the stored rows
+  * under a broadcast batch, compaction preserves answers while folding the layout,
   * and the high-water mark refuses folded replays.
   *
   * The shared fixtures can't drive this family (their texts are all
@@ -18,8 +24,21 @@ import graft.operators.{PHash, PHashIndex}
   * re-posted image) plus one 1-char-nudged variant per base (a 144-char
   * payload maps 2 chars per pixel, so one nudge moves one pixel and
   * flips ≤ 2 dHash bits — the re-encoded near-dup population). */
-class PHashIndexSpec extends SparkSpec {
+class PHashIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  private def broadcastJoins(df: DataFrame): Seq[SparkPlan] =
+    collect(df.queryExecution.executedPlan) { case j: BroadcastHashJoinExec => j }
+
+  /** Exchanges (shuffle or broadcast) of an executed plan that have a
+    * scan of the stored band table below them. */
+  private def exchangesOverStore(df: DataFrame): Seq[SparkPlan] =
+    collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+      .filter(e => collect(e) {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(
+              _.toString.contains("/sigs/ingest=")) => s
+      }.nonEmpty)
 
   private def tmpRoot(tag: String): String = new java.io.File(
     java.nio.file.Files.createTempDirectory(s"graft_phidx_$tag").toFile,
@@ -96,15 +115,44 @@ class PHashIndexSpec extends SparkSpec {
   }
 
   test("shuffle branch (corpus-scale batch) ≡ broadcast branch") {
+    // at fixture scale Catalyst broadcasts the batch; forcing both
+    // thresholds to −1 takes the branch a corpus-scale batch takes, and
+    // it must answer bit-for-bit the same with no broadcast join left
     val m5 = pmod(col("doc_id"), lit(5L))
     val root = tmpRoot("gate")
     PHashIndex.build(corpus.filter(m5 =!= 0), root)
-    val bc = PHashIndex.queryBatch(spark, root, corpus.filter(m5 === 0))
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    val sh = PHashIndex.queryBatch(spark, root, corpus.filter(m5 === 0),
-        docBroadcastLimit = 0L)
-      .as[(Long, Long, Long)].collect().toSeq.sorted
-    assert(bc === sh, "the adaptive gate's branches diverge")
+    // collect each DataFrame itself: its executed plan is the one read
+    def run(): (DataFrame, Seq[String]) = {
+      val df = PHashIndex.queryBatch(spark, root, corpus.filter(m5 === 0))
+      (df, df.collect().map(_.toString).sorted.toSeq)
+    }
+    val (bcast, bc) = run()
+    assert(broadcastJoins(bcast).nonEmpty, "no broadcast branch")
+    val (shuf, sh) = shuffleBranch(run())
+    assert(bc.nonEmpty && bc === sh, "the two branches diverge")
+    assert(broadcastJoins(shuf).isEmpty,
+      s"shuffle branch still broadcasts:\n${shuf.queryExecution.executedPlan}")
+  }
+
+  test("the ingest pair pass on a cached batch broadcasts it: " +
+      "no exchange above the stored scan") {
+    // the ingest appends first, which fills the batch cache; the pair
+    // pass is then planned on the measured size and must stream the
+    // stored band rows under a broadcast of the batch's
+    val m5 = pmod(col("doc_id"), lit(5L))
+    val root = tmpRoot("shape")
+    PHashIndex.build(corpus.filter(m5 =!= 0), root)
+    val rows = PHashIndex.sigRows(corpus.filter(m5 === 0)).persist()
+    try {
+      rows.count() // fills the cache, as the ingest's append does
+      val p = PHashIndex.ingestPairs(spark, root,
+        PHashIndex.committedIngests(spark, root), rows)
+      assert(p.collect().nonEmpty)
+      val plan = p.queryExecution.executedPlan
+      assert(broadcastJoins(p).nonEmpty, s"pair pass broadcasts nothing:\n$plan")
+      assert(exchangesOverStore(p).isEmpty,
+        s"pair pass moves the stored band rows:\n$plan")
+    } finally rows.unpersist()
   }
 
   test("compact: answers preserved, ingests fold to one file set, " +

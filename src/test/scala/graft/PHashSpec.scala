@@ -196,7 +196,7 @@ class PHashSpec extends SparkSpec {
     val df = texts.toDF("doc_id", "text")
     val fast = PHash.signatures(df).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val spec = PHash.signaturesViaColumns(df).collect()
+    val spec = PHashReference.signaturesViaColumns(df).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast === spec, "string kernel drifted from the geometry spec")
 
@@ -209,7 +209,7 @@ class PHashSpec extends SparkSpec {
     }.toDS()
     val fastF = PHash.frameSignatures(frames).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val specF = PHash.frameSignaturesViaColumns(frames).collect()
+    val specF = PHashReference.frameSignaturesViaColumns(frames).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fastF === specF, "byte kernel drifted from the geometry spec")
   }

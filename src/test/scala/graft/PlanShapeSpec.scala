@@ -468,6 +468,35 @@ class PlanShapeSpec extends SparkSpec {
     assert(invQuery <= 6, s"InvertedIndex.query ran $invQuery jobs")
   }
 
+  test("the phash and frame screens build with no Spark job; a phash " +
+      "ingest batch stays within its job count") {
+    // a size gate (count, with a checkpoint so the counted frame is not
+    // recomputed) runs its jobs while the DataFrame is being built;
+    // broadcast-or-shuffle is Catalyst's decision at execution instead
+    import org.apache.spark.sql.functions._
+    import graft.operators.{FrameIndex, PHash, PHashIndex}
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+      .select("doc_id", "text")
+    val m5 = pmod(col("doc_id"), lit(5))
+    val batch = docs.filter(m5 === 0)
+    val ph = java.nio.file.Files.createTempDirectory("graft_jobs_ph").toString
+    PHashIndex.build(docs.filter(m5 =!= 0), ph)
+    val fr = java.nio.file.Files.createTempDirectory("graft_jobs_fr").toString
+    FrameIndex.build(docs.filter(m5 =!= 0), fr)
+    val queryBuild = jobCount { PHashIndex.queryBatch(spark, ph, batch); () }
+    val screenBuild = jobCount {
+      PHash.screenFrames(batch, FrameIndex.stored(spark, fr)); ()
+    }
+    val pairs = java.nio.file.Files.createTempDirectory("graft_jobs_pp").toString
+    val ingest = jobCount(
+      graft.streaming.Streams.phashIndexIngest(batch, ph, pairs, 0L))
+    info(s"jobs: PHashIndex.queryBatch build $queryBuild, " +
+      s"PHash.screenFrames build $screenBuild, phashIndexIngest $ingest")
+    assert(queryBuild == 0, s"building PHashIndex.queryBatch ran $queryBuild jobs")
+    assert(screenBuild == 0, s"building PHash.screenFrames ran $screenBuild jobs")
+    assert(ingest <= 4, s"one phashIndexIngest batch ran $ingest jobs")
+  }
+
   test("whole-stage codegen covers the hot path of the flagship") {
     // AQE finalizes the plan only on execution; codegen'd operators carry
     // the "*(n)" prefix in the executed plan string.

@@ -9,6 +9,20 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   /** smoke tier fixtures (TESTDATA.md) */
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** `body` with both broadcast thresholds at −1: the shuffle branch a
+    * corpus-scale batch takes on its own. */
+  def shuffleBranch[A](body: => A): A = {
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = thresholds.map(t => t -> spark.conf.getOption(t)).toMap
+    thresholds.foreach(spark.conf.set(_, "-1"))
+    try body
+    finally prev.foreach {
+      case (t, Some(v)) => spark.conf.set(t, v)
+      case (t, None)    => spark.conf.unset(t)
+    }
+  }
 }
 
 object SparkSpec {

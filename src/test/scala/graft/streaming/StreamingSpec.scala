@@ -565,7 +565,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("s_dedup_frames: streamed frame hits ≡ one-shot screen vs stored index") {
-    import graft.operators.PHash
+    import graft.operators.{FrameIndex, PHash}
     import graft.sources.Tables
     val tmp = System.getProperty("java.io.tmpdir")
     val index = s"$tmp/graft_frameidx"
@@ -574,8 +574,8 @@ class StreamingSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
     val isIngest = col("doc_id") % 3 === 0
-    PHash.storeFrameIndex(docs.filter(!isIngest), index)
-    val stored = spark.read.parquet(index)
+    FrameIndex.build(docs.filter(!isIngest), index)
+    val stored = FrameIndex.stored(spark, index)
     // one-shot screen of ALL ingest docs against the frozen index IS
     // the truth for the streamed union (a doc's hits depend only on
     // the doc + the index)
