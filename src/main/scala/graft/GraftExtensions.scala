@@ -13,6 +13,8 @@ import graft.functions.{DotProduct, FreqSketch, TopKByScore}
   * pure-SQL users (spark.sql, JDBC, SQL files) get the same fused
   * no-allocation loop the DataFrame facade uses — cosine in SQL becomes
   * `graft_dot(a,b) / (sqrt(graft_dot(a,a)) * sqrt(graft_dot(b,b)))`.
+  * Also registers the AQE rule [[SmallSort]], which sorts a small,
+  * measured result on one partition instead of range-partitioning it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -67,5 +69,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(graft.functions.DuckDbCompat.getClass.getCanonicalName,
                            name),
         builder))
+    ext.injectQueryStagePrepRule(SmallSort)
   }
 }

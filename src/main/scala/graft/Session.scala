@@ -16,6 +16,10 @@ import graft.util.Confs
   *     (it only affects NANOS columns);
   *   - the objectHashAggregate fallback threshold at 500000, which the
   *     bounded-state aggregates rely on (see [[graft.util.Confs]]);
+  *   - a 4096-entry codegen cache: one pass of the declared suite
+  *     generates about 2,400 distinct classes, so Spark's default of 100
+  *     recompiles most of them on every later pass (a static conf, so it
+  *     must be set here, before the session starts);
   *   - no Spark UI. */
 object Session {
   def builder(cores: Int): SparkSession.Builder =
@@ -26,5 +30,6 @@ object Session {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(Confs.ObjHashKey, "500000")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.ui.enabled", "false")
 }

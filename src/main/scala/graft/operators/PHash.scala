@@ -268,8 +268,7 @@ object PHash {
 
   def frameContainment(docs: DataFrame, frameBytes: Int = NPix,
                        stride: Int = 2, num: Int = 4, den: Int = 5,
-                       dfCap: Long = DefaultFrameDfCap,
-                       ordered: Boolean = true)
+                       dfCap: Long = DefaultFrameDfCap)
       : DataFrame = {
     val fg = frameGrain(docs, frameBytes, stride, num, den, dfCap)
     val (g, sizes, repPairs) = (fg.groups, fg.sizes, fg.repPairs)
@@ -296,11 +295,8 @@ object PHash {
         Seq("doc_b"))
       .select(col("da").as("doc_a"), col("db").as("doc_b"),
         col("n_a"), col("n_b"), col("n_inter"), col("containment"))
-    val all = intra.unionByName(inter)
-    // ordered=false: the ingest path writes to parquet where a global
-    // sort is pure cost (range-sampling pass + total-sort exchange per
-    // micro-batch); declared batch keys keep the oracle-stable order.
-    if (ordered) all.orderBy("doc_a", "doc_b") else all
+    // the declared batch keys' oracle-stable order
+    intra.unionByName(inter).orderBy("doc_a", "doc_b")
   }
 
   /** The frame-containment DECISION frame (doc_id, cluster_id,
@@ -473,7 +469,7 @@ object PHash {
     * through the membership list (identical signature sets ⇒ identical
     * n_inter/n_b for every member, the frameContainment argument).
     * Output is row-identical to
-    * `frameContainment(ordered=false)` ∪ the unfused two-direction
+    * `frameContainment` (order aside) ∪ the unfused two-direction
     * stored screen on the same batch — pinned against that unfused
     * reference pair in FrameIndexSpec on a corpus where BOTH the df cap
     * and the hot set fire — but the plan

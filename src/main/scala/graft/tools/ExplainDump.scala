@@ -4,9 +4,10 @@ import graft.{Session, SparkEntry}
 
 /** Dev tool: write `.explain("formatted")` for declared keys to files —
   * the plans/r18 before/after evidence the optimization rounds commit.
-  * Runs each key once first so AQE's final plan (the one that actually
-  * executed) is what gets dumped, then writes BOTH the pre-execution
-  * formatted plan and the executed-plan string.
+  * Collects each key's own DataFrame first (not a `count()`, which runs
+  * a different query), so both the formatted plan and the executed-plan
+  * string show the plan AQE actually ran (`isFinalPlan=true`), with
+  * every adaptive branch it took.
   * Usage: runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> <key>[,<key>…]
   */
 object ExplainDump {
@@ -19,14 +20,14 @@ object ExplainDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (k <- keys; fn <- SparkEntry.queries.get(k)) {
       val df = fn(spark, d)
-      df.count() // execute so AQE finalizes subplans
+      df.collect() // run this plan, so AQE finalizes it
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       val executed = df.queryExecution.executedPlan.toString
       val out = s"$outDir/${k}_$suffix.txt"
       java.nio.file.Files.writeString(java.nio.file.Paths.get(out),
         s"== explain(formatted) — $k @ $d ==\n" + formatted +
-          "\n\n== executed plan (post-AQE where finalized) ==\n" + executed)
+          "\n\n== executed plan (AQE final) ==\n" + executed)
       println(s"[explain] wrote $out")
     }
     spark.stop()

@@ -359,7 +359,7 @@ class FrameIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
     val within = PHash.frameContainment(batch, stride = 1, num = 1,
-      den = 2, dfCap = 5, ordered = false)
+      den = 2, dfCap = 5)
     val cross = PHashReference.screenAdmitFused(sig,
       FrameIndex.stored(spark, root),
       excludeStored = batch, num = 1, den = 2, hotHashes = Some(hot))
@@ -429,7 +429,7 @@ class FrameIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         Multimodal.fromDocuments(batch), PHash.NPix, 1))
         .localCheckpoint(true)
       val unfused = PHash.frameContainment(batch, stride = 1, num = 1,
-          den = 2, dfCap = 3, ordered = false)
+          den = 2, dfCap = 3)
         .unionByName(PHashReference.screenAdmitFused(sig, stored,
           excludeStored = batch, num = 1, den = 2,
           hotHashes = Some(hot)))

@@ -16,6 +16,11 @@ class PlanShapeSpec extends SparkSpec {
   private def executedFinal(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf0001)
     df.collect()
+    finalPlan(df)
+  }
+
+  /** `df`'s AQE-final plan; `df` must have run. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
     val s = df.queryExecution.executedPlan.toString
     s.indexOf("== Initial Plan ==") match {
       case -1 => s
@@ -495,6 +500,90 @@ class PlanShapeSpec extends SparkSpec {
     assert(queryBuild == 0, s"building PHashIndex.queryBatch ran $queryBuild jobs")
     assert(screenBuild == 0, s"building PHash.screenFrames ran $screenBuild jobs")
     assert(ingest <= 4, s"one phashIndexIngest batch ran $ingest jobs")
+  }
+
+  /** The DuckDB-proxy keys whose final ORDER BY sorts a small result
+    * of measured aggregate stages (not q_join_interval, whose sort sits
+    * above a join; q_topk and q_knn_cosine have no global sort). */
+  private val smallSortKeys = Seq("q_agg_hash", "q_join_multiway",
+    "q_win_topk_group", "q_join_asof", "q_tumbling", "q_json_funcs",
+    "q_events_session", "q_intersect", "q_dedup")
+
+  test("SmallSort: the small-sort proxy keys sort on one partition") {
+    for (k <- smallSortKeys) {
+      val p = executedFinal(k)
+      assert(p.contains("Exchange SinglePartition") &&
+        !p.contains("Exchange rangepartitioning"),
+        s"$k kept its range exchange:\n${p.take(3000)}")
+    }
+  }
+
+  test("SmallSort: the small-sort proxy keys run no range-sampling job") {
+    // action jobs at sf0.001; with the range exchange each ran one more,
+    // the RangePartitioner's sampling job
+    val want = Map("q_agg_hash" -> 3, "q_join_multiway" -> 6,
+      "q_win_topk_group" -> 3, "q_join_asof" -> 4, "q_tumbling" -> 3,
+      "q_json_funcs" -> 3, "q_events_session" -> 3, "q_intersect" -> 4,
+      "q_dedup" -> 4)
+    smallSortKeys.foreach(k => SparkEntry.queries(k)(spark, sf0001))  // the warm call
+    val got = smallSortKeys.map { k =>
+      val df = SparkEntry.queries(k)(spark, sf0001)
+      k -> jobCount(df.collect())
+    }.toMap
+    info(s"action jobs: ${smallSortKeys.map(k => s"$k ${got(k)}").mkString(", ")}")
+    assert(got === want)
+  }
+
+  test("SmallSort branch law: with coalescing off each key keeps its " +
+      "range exchange and returns the same rows in the same order") {
+    for (k <- smallSortKeys) {
+      val single = SparkEntry.queries(k)(spark, sf0001).collect().toSeq
+      val (plan, ranged) =
+        withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+          val df = SparkEntry.queries(k)(spark, sf0001)
+          val rows = df.collect().toSeq
+          (finalPlan(df), rows)
+        }
+      assert(plan.contains("Exchange rangepartitioning") &&
+        !plan.contains("Exchange SinglePartition"),
+        s"$k lost its range exchange with coalescing off:\n${plan.take(3000)}")
+      assert(ranged == single, s"$k: the one-partition sort changed the rows or their order")
+    }
+  }
+
+  test("SmallSort leaves large sorts, repartitionByRange and sorts above a join alone") {
+    import org.apache.spark.sql.functions._
+    // input above the size AQE coalesces into one partition
+    val large = withConfs(
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1") {
+      executedFinal("q_agg_hash")
+    }
+    assert(large.contains("Exchange rangepartitioning") &&
+      !large.contains("Exchange SinglePartition"),
+      s"a sort above the one-partition size lost its range exchange:\n${large.take(3000)}")
+    def agg(name: String) = spark.range(2000)
+      .groupBy((col("id") % 50).as("k")).agg(sum("id").as(name))
+    // the same small aggregate, sorted: the rule fires
+    val sorted = agg("s").orderBy("k")
+    sorted.collect()
+    assert(finalPlan(sorted).contains("Exchange SinglePartition"),
+      s"a small sort kept its range exchange:\n${finalPlan(sorted)}")
+    // a user's repartitionByRange keeps its partition count
+    val byRange = agg("s").repartitionByRange(8, col("k"))
+    byRange.collect()
+    assert("Exchange rangepartitioning\\([^\\n]*, 8\\), REPARTITION_BY_NUM".r
+      .findFirstIn(finalPlan(byRange)).isDefined,
+      s"repartitionByRange(8) rewritten:\n${finalPlan(byRange)}")
+    assert(byRange.rdd.getNumPartitions === 8)
+    // a sort above a join: the stages' sizes do not bound its input
+    val joined = agg("s").join(agg("t"), "k").orderBy("k")
+    joined.collect()
+    assert(finalPlan(joined).contains("Exchange rangepartitioning"),
+      s"a sort above a join lost its range exchange:\n${finalPlan(joined)}")
+    val interval = executedFinal("q_join_interval")
+    assert(interval.contains("Exchange rangepartitioning"),
+      s"q_join_interval lost its range exchange:\n${interval.take(3000)}")
   }
 
   test("whole-stage codegen covers the hot path of the flagship") {

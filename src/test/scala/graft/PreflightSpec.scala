@@ -119,6 +119,7 @@ class PreflightSpec extends SparkSpec {
     assert(c.get("spark.sql.session.timeZone") == "UTC")
     assert(c.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(c.get("spark.sql.extensions").split(",").contains("graft.GraftExtensions"))
+    assert(c.get("spark.sql.codegen.cache.maxEntries") == "4096")
   }
 
   test("q_knn_join / q_text_heavyhitters self-configure on a foreign session") {

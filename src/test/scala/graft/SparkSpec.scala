@@ -12,15 +12,18 @@ trait SparkSpec extends AnyFunSuite {
 
   /** `body` with both broadcast thresholds at −1: the shuffle branch a
     * corpus-scale batch takes on its own. */
-  def shuffleBranch[A](body: => A): A = {
-    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = thresholds.map(t => t -> spark.conf.getOption(t)).toMap
-    thresholds.foreach(spark.conf.set(_, "-1"))
+  def shuffleBranch[A](body: => A): A =
+    withConfs("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  /** `body` with the given session confs, restored after. */
+  def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {
-      case (t, Some(v)) => spark.conf.set(t, v)
-      case (t, None)    => spark.conf.unset(t)
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
   }
 }
